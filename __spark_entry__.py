@@ -716,14 +716,12 @@ def q_minhash_band_index(spark, sf):
 
 def q_near_dup_pairs(spark, sf):
     """LSH candidates + exact-Jaccard verify, oracled by a DuckDB
-    brute-force over all pairs. est_margin=1.0 disables the signature
-    prefilter so only banding recall and the exact verify are under
-    test (at sf0.01 the exact verify over all candidates is cheap; in
-    production the prefilter keeps its default margin)."""
+    brute-force over all pairs: banding recall and the exact verify are
+    what is under test."""
     docs = _t(spark, sf, "documents")
     sig = add_signatures(docs, DEDUP_CFG).persist()
     cand = candidate_pairs(sig, DEDUP_CFG)
-    return verify_pairs(cand, sig, DEDUP_CFG, exact=True, est_margin=1.0)
+    return verify_pairs(cand, sig, DEDUP_CFG, exact=True)
 
 
 def q_near_dup_clusters(spark, sf):

@@ -164,11 +164,10 @@ def build_suite():
         return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
     def near_dup_pairs_default(s):
-        """Production-shaped pair generation: default est_margin keeps
-        the JVM signature-agreement prefilter ON. The oracle query
-        (near_dup_pairs) disables it (est_margin=1.0) so banding
-        recall itself is what the DuckDB hash-match tests — both are
-        timed so the prefilter's cost/benefit stays measured."""
+        """Production-shaped pair generation (candidate_pairs +
+        exact verify_pairs) outside the declared-query harness. Since
+        the exact path lost its signature prefilter it runs the same
+        plan as near_dup_pairs."""
         from fuzzy_matcher_spark.operators.dedup_minhash import (
             add_signatures,
             candidate_pairs,

@@ -33,7 +33,6 @@ from pyspark.sql import types as T
 
 from fuzzy_matcher_spark.config import DedupConfig
 
-_P = np.uint64(4294967311)  # prime > 2^32 (kept for reference/tests)
 _MASK32 = np.uint64(0xFFFFFFFF)
 _SHIFT32 = np.uint64(32)
 

@@ -7,9 +7,14 @@ cluster assignments + canonical-doc election, and prints a one-line
 JSON report. Re-running with the same --run-id resumes mid-pipeline
 (plans/pipeline.py).
 
-On a real cluster the session comes from spark-submit's conf
-(--master yarn/k8s, executors, Iceberg catalog); locally it falls back
-to local[*]. See scripts/submit.sh.
+The job never sets the master: on a real cluster it comes from
+spark-submit (--master yarn/k8s, executors, Iceberg catalog), and a
+plain local launch falls back to local[*]. On top of the launch conf
+the job applies the engine's tuned runtime SQL settings
+(session.tuned_sql_conf: shuffle width max(defaultParallelism, 8), AQE
+coalescing, 2000-row Arrow batches, ...) to every key that --conf or
+spark-defaults left unset, so a submitted value always wins. See
+scripts/submit.sh.
 """
 
 from __future__ import annotations
@@ -18,6 +23,12 @@ import argparse
 import json
 import sys
 import time
+
+# job-only default on top of the engine's tuned session settings:
+# signature tables carry wide array<long> columns, and the default
+# 4096-row vectorized batches OOM small heaps (seen at 200k docs with
+# a 1g driver); smaller batches keep reader memory bounded
+JOB_DEFAULTS = {"spark.sql.parquet.columnarReaderBatchSize": "512"}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -39,17 +50,16 @@ def main(argv: list[str] | None = None) -> int:
 
     from fuzzy_matcher_spark.config import DedupConfig
     from fuzzy_matcher_spark.plans.pipeline import DedupPipeline
+    from fuzzy_matcher_spark.session import submit_conf
     from fuzzy_matcher_spark.sources.tableio import get_tableio
 
-    spark = (
-        SparkSession.builder.appName(f"dedup-{args.run_id}")
-        # signature tables carry wide array<long> columns: the default
-        # 4096-row vectorized batches OOM small heaps (seen at 200k docs
-        # with a 1g driver); smaller batches keep reader memory bounded
-        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .getOrCreate()
+    spark = SparkSession.builder.appName(f"dedup-{args.run_id}").getOrCreate()
+    sc = spark.sparkContext
+    tuned = submit_conf(
+        dict(sc.getConf().getAll()), sc.defaultParallelism, JOB_DEFAULTS
     )
+    for k, v in tuned.items():
+        spark.conf.set(k, v)
 
     docs = (
         spark.read.parquet(args.input)
@@ -76,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     t0 = time.perf_counter()
     clusters, report = pipe.run(docs, run_id=args.run_id)
-    n_docs = clusters.count()
+    n_docs = next(s.rows for s in report.stages if s.stage == "clusters")
     wall = time.perf_counter() - t0
 
     if args.output:

@@ -338,7 +338,6 @@ def verify_pairs(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     exact: bool = True,
-    est_margin: float = 0.1,  # kept for API compat; see docstring
     shingle_df: DataFrame | None = None,
     shingle_builder=None,
     materialize: bool = True,
@@ -372,9 +371,7 @@ def verify_pairs(
     before the exact check) is gone from the exact path: its only
     savings was python time on non-survivors, worth ~10us/pair to the
     numpy set-intersection kernel, while costing a second wide join
-    pass. est_margin is retained so existing callers keep working; it
-    only matters for exact=False, where results now carry the full
-    estimate (no margin cut) exactly as before.
+    pass.
 
     ``pairs`` is persisted here: it is consumed twice (explode +
     downstream reuse by callers), and an unpersisted candidate

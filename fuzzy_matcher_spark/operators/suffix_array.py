@@ -142,9 +142,7 @@ def suffix_substring_pairs(
     shared run then requires its anchor to survive the cap in BOTH
     docs — exact for docs under the cap (the sf0.01 oracle corpus is;
     the 60-gram equi-join SQL stays a full oracle), monotonically
-    recall-degrading above it. Dropped-anchor counts are observable
-    via ``suffix_anchor_cap_stats`` (same never-silent contract as
-    operators.pairs.capped_bucket_stats); the winnowing twin
+    recall-degrading above it. The winnowing twin
     (dedup_substring.py), which ships texts only for verified
     candidate pairs, remains the preferred engine when buckets are
     small."""
@@ -176,39 +174,4 @@ def suffix_substring_pairs(
         anchored.groupBy("anchor")
         .applyInPandas(per_bucket, schema="a long, b long")
         .distinct()
-    )
-
-
-def suffix_anchor_cap_stats(
-    df: DataFrame,
-    cfg: DedupConfig | None = None,
-    text_col: str = "text",
-    ngram: int = 20,
-    max_anchors_per_doc: int = 256,
-) -> DataFrame:
-    """Observability for the per-doc anchor cap: how many docs exceed
-    it and how many anchors (text replicas) the cap drops. One
-    aggregation; pipelines record it next to capped_bucket_stats —
-    the cap is never silent."""
-    cfg = cfg or DedupConfig()
-    window = max(cfg.min_substring - ngram + 1, 1)
-    n = F.size(anchors_udf(ngram, window)(F.col(text_col)))
-    zero = F.lit(0).cast("long")
-    return df.select(n.alias("_n")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.max("_n").cast("long"), zero).alias("max_anchors"),
-        F.coalesce(
-            F.sum(F.when(F.col("_n") > max_anchors_per_doc, 1).otherwise(0))
-            .cast("long"),
-            zero,
-        ).alias("n_capped_docs"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_n") > max_anchors_per_doc,
-                    F.col("_n") - max_anchors_per_doc,
-                ).otherwise(0)
-            ).cast("long"),
-            zero,
-        ).alias("anchors_dropped_by_cap"),
     )

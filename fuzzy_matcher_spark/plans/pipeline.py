@@ -9,11 +9,14 @@ Stage graph (minhash mode; simhash swaps stages 2-4):
 Each stage materializes its output through TableIO (Iceberg or the
 parquet-manifest fallback) under ``<run_id>__<stage>``, and appends
 
-- a row to ``_metrics``  (run_id, stage, rows, partitions, wall_sec,
-  completed_at, config_json)
-- per-partition rows to ``_lineage`` (run_id, stage, partition_id,
-  rows) — partition-level row accounting for debugging skew and for
-  verifying resumed runs read exactly what the original wrote.
+- per-partition rows to ``_lineage`` (run_id, stage, attempt,
+  partition_id, rows) — partition-level row accounting for debugging
+  skew and for verifying resumed runs read exactly what the original
+  wrote;
+- then a row to ``_metrics`` (run_id, stage, rows, wall_sec,
+  completed_at, config_json), which marks the stage done. The pairs
+  stage commits the ``bucket_stats`` skew-cap row (rows = pairs dropped
+  by the bucket cap) in the same append.
 
 Resume = re-invoking run() with the same run_id: stages whose metrics
 row exists and whose output table is readable are skipped; execution
@@ -26,10 +29,12 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from fuzzy_matcher_spark.config import DedupConfig
 from fuzzy_matcher_spark.operators.connected_components import connected_components
@@ -51,6 +56,29 @@ from fuzzy_matcher_spark.sources.tableio import TableIO
 
 METRICS_TABLE = "_metrics"
 LINEAGE_TABLE = "_lineage"
+METRICS_SCHEMA = (
+    "run_id string, stage string, rows long, wall_sec double,"
+    " completed_at string, config_json string"
+)
+
+
+def _count_partition(batches):
+    """mapInArrow body: one (partition_id, rows) row per non-empty
+    partition of a relation projected to its spark_partition_id() —
+    per-partition counts without the shuffle (and, under AQE, the extra
+    job) of a groupBy."""
+    import pyarrow as pa
+
+    pid, rows = None, 0
+    for b in batches:
+        if b.num_rows:
+            pid = b.column(0)[0].as_py()
+            rows += b.num_rows
+    if rows:
+        yield pa.RecordBatch.from_pydict(
+            {"partition_id": [pid], "rows": [rows]},
+            schema=pa.schema([("partition_id", pa.int32()), ("rows", pa.int64())]),
+        )
 
 
 @dataclass
@@ -117,15 +145,19 @@ class DedupPipeline:
         return {r.stage: r.config_json for r in rows}
 
     def _record(self, run_id: str, stage: str, df: DataFrame, wall: float) -> int:
-        import uuid
-
+        """Commit a finished stage: its per-partition ``_lineage`` rows,
+        then its ``_metrics`` row (the pairs stage adds the
+        ``bucket_stats`` row to the same append). Two Spark jobs: the
+        lineage append, which counts the rows of every partition of the
+        read-back checkpoint as it writes them and hands the total to
+        the driver, and the metrics append."""
         # attempt id distinguishes a rebuild (e.g. after checkpoint
         # corruption) from the original write — counting without it
         # double-counts stale lineage rows from the failed attempt
         attempt = uuid.uuid4().hex
         lineage = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
+            df.select(F.spark_partition_id().alias("partition_id"))
+            .mapInArrow(_count_partition, "partition_id int, rows long")
             .select(
                 F.lit(run_id).alias("run_id"),
                 F.lit(stage).alias("stage"),
@@ -134,71 +166,70 @@ class DedupPipeline:
                 "rows",
             )
         )
-        self.io.write(lineage, LINEAGE_TABLE, mode="append")
-        # row count re-read from the persisted lineage — metrics reflect
-        # what was actually written, not what the plan promised
-        n = int(
-            self.io.read(LINEAGE_TABLE)
-            .where(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == stage)
-                & (F.col("attempt") == attempt)
-            )
-            .agg(F.coalesce(F.sum("rows"), F.lit(0)))
-            .collect()[0][0]
+        # the row count is the sum of the lineage rows as written — the
+        # metrics reflect what the checkpoint holds, not what the plan
+        # promised — observed during the append instead of read back
+        total = Observation(f"lineage-{attempt}")
+        lineage = lineage.observe(
+            total, F.coalesce(F.sum("rows"), F.lit(0).cast("long")).alias("rows")
         )
-        metrics = self.spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    stage,
-                    n,
-                    float(round(wall, 3)),
-                    time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    self._cfg_json,
-                )
-            ],
-            "run_id string, stage string, rows long, wall_sec double,"
-            " completed_at string, config_json string",
+        self.io.write(lineage, LINEAGE_TABLE, mode="append")
+        n = int(total.get["rows"])
+        rows = [self._metrics_row(run_id, stage, n, wall, self._cfg_json)]
+        if stage == "pairs" and self._bucket_index is not None:
+            rows.append(self._bucket_stats_row(run_id, *self._bucket_index))
+        # built from literals in the JVM: createDataFrame(list) would go
+        # through a Python RDD, i.e. Python workers, for a few rows
+        fields = T.StructType.fromDDL(METRICS_SCHEMA).fields
+        structs = [
+            F.struct(
+                *(F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, fields))
+            )
+            for r in rows
+        ]
+        metrics = self.spark.range(1, numPartitions=1).select(
+            F.inline(F.array(*structs))
         )
         self.io.write(metrics, METRICS_TABLE, mode="append")
         return n
 
-    def _record_bucket_stats(
-        self, run_id: str, done: dict, index_fn, bucket_keys: list[str]
-    ) -> None:
-        """Record the skew-cap observability row (bucket histogram +
-        pairs dropped by star emission) into the metrics table — the
-        cap is never silent. Skipped on resume (stage already done)."""
-        stage = "bucket_stats"
-        if stage in done:
-            return
+    @staticmethod
+    def _metrics_row(
+        run_id: str, stage: str, rows: int, wall: float, config_json: str
+    ) -> tuple:
+        return (
+            run_id,
+            stage,
+            rows,
+            float(round(wall, 3)),
+            time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            config_json,
+        )
+
+    def _bucket_stats_row(
+        self, run_id: str, index_fn, bucket_keys: list[str]
+    ) -> tuple:
+        """The skew-cap observability row (bucket histogram + pairs
+        dropped by star emission) for the metrics table — the cap is
+        never silent."""
         t0 = time.time()
         stats = capped_bucket_stats(
             index_fn(), bucket_keys, self.cfg.max_band_bucket
         ).collect()[0]
-        row = self.spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    stage,
-                    int(stats.pairs_dropped_by_cap),
-                    float(round(time.time() - t0, 3)),
-                    time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    json.dumps(
-                        {
-                            "n_buckets": int(stats.n_buckets),
-                            "max_bucket": int(stats.max_bucket),
-                            "n_capped": int(stats.n_capped),
-                            "cap": self.cfg.max_band_bucket,
-                        }
-                    ),
-                )
-            ],
-            "run_id string, stage string, rows long, wall_sec double,"
-            " completed_at string, config_json string",
+        return self._metrics_row(
+            run_id,
+            "bucket_stats",
+            int(stats.pairs_dropped_by_cap),
+            time.time() - t0,
+            json.dumps(
+                {
+                    "n_buckets": int(stats.n_buckets),
+                    "max_bucket": int(stats.max_bucket),
+                    "n_capped": int(stats.n_capped),
+                    "cap": self.cfg.max_band_bucket,
+                }
+            ),
         )
-        self.io.write(row, METRICS_TABLE, mode="append")
 
     def _table(self, run_id: str, stage: str) -> str:
         return f"{run_id}__{stage}"
@@ -220,9 +251,11 @@ class DedupPipeline:
                 )
             # validate the checkpoint is actually readable — a killed
             # writer can leave a committed-looking but truncated table.
-            # count() touches every parquet footer (metadata-only, no
-            # row scan) and fails on any truncated part; fall through
-            # and rebuild instead of failing mid-resume.
+            # read() infers the schema from ONE part's footer (whichever
+            # the listing yields first); count() then opens every
+            # part's footer in its scan tasks (metadata-only, no row
+            # scan). A truncated part fails one or the other: fall
+            # through and rebuild instead of failing mid-resume.
             try:
                 out = self.io.read(tname)
                 n = out.count()
@@ -244,6 +277,10 @@ class DedupPipeline:
         cfg, idc, txt = self.cfg, self.id_col, self.text_col
         report = PipelineReport(run_id)
         done = self._completed_stages(run_id)
+        # (band index builder, bucket keys) of the bucket_stats row the
+        # pairs stage commits with its own metrics row; None when a
+        # previous attempt of this run already recorded it
+        self._bucket_index = None
 
         ingest = self._run_stage(
             run_id, "ingest", done, lambda: docs.select(idc, txt), report
@@ -257,14 +294,13 @@ class DedupPipeline:
                 lambda: add_signatures(ingest, cfg, txt, idc),
                 report,
             )
+            if "bucket_stats" not in done:
+                self._bucket_index = (
+                    lambda: explode_bands(sig, idc, cfg),
+                    ["band_id", "band_hash"],
+                )
             pairs = self._run_stage(
                 run_id, "pairs", done, lambda: candidate_pairs(sig, cfg, idc), report
-            )
-            self._record_bucket_stats(
-                run_id,
-                done,
-                lambda: explode_bands(sig, idc, cfg),
-                ["band_id", "band_hash"],
             )
             verified = self._run_stage(
                 run_id,
@@ -281,18 +317,17 @@ class DedupPipeline:
                 lambda: add_fingerprints(ingest, cfg, txt, idc),
                 report,
             )
+            if "bucket_stats" not in done:
+                self._bucket_index = (
+                    lambda: explode_slices(fp, idc, "fingerprint", cfg.simhash_tables),
+                    ["table_id", "slice_key"],
+                )
             pairs = self._run_stage(
                 run_id,
                 "pairs",
                 done,
                 lambda: simhash_candidate_pairs(fp, cfg, idc),
                 report,
-            )
-            self._record_bucket_stats(
-                run_id,
-                done,
-                lambda: explode_slices(fp, idc, "fingerprint", cfg.simhash_tables),
-                ["table_id", "slice_key"],
             )
             verified = self._run_stage(
                 run_id,

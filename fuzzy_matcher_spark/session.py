@@ -11,11 +11,16 @@ submit to a multi-executor cluster via ``spark-submit --py-files``
 - shuffle partitions default to cores locally; on a real cluster this
   is raised to ~2-3x total cores (AQE coalesces down).
 - UTC session timezone so DuckDB-oracle comparisons are stable.
+
+These runtime SQL settings live in ``tuned_sql_conf``; the spark-submit
+job (jobs/dedup_job.py) applies the same set through ``submit_conf``,
+where anything the submit itself sets wins.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -81,47 +86,9 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let AQE re-optimize (and in particular COALESCE) the plans
-        # that fill persisted relations: the dedup operators persist
-        # several small intermediates (tagged band index, candidate
-        # pairs), and with this off each cache materializes at the
-        # full static shuffle width, so every downstream consumer
-        # stage inherits cores-many near-empty partitions (r6
-        # event-log capture: five 96-task stages per flagship run
-        # whose tasks carry ~6 KB each). Nothing here relies on cache
-        # output partitioning lining up with a later join.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHE_AQE", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_MB", "8") + "m",
-        )
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch size gates how well the JVM producer and the
-        # python worker overlap: a task that holds only 1-2 batches
-        # serializes the two sides (JVM idles while python crunches
-        # the one giant batch and vice versa — measured r6 at 300k
-        # docs/local[8]: 12.5k-doc tasks with 10k-row batches ran the
-        # signature stage at ~55% core utilization; 2k-row batches cut
-        # the flagship 51s -> 31s). 2000 rows x ~400 tokens x 8 B is
-        # ~6 MB of token-hash payload per batch — big enough that
-        # per-batch dispatch (~ms) stays noise, small enough that
-        # every task pipelines several batches.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2000"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config(map=tuned_sql_conf(shuffle))
     )
     if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1":
         # Pre-fault and HOLD the full heap at JVM start. This sandbox
@@ -139,6 +106,64 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def tuned_sql_conf(shuffle_partitions: int) -> dict[str, str]:
+    """The engine's runtime SQL settings, shared by ``get_spark`` and
+    the spark-submit job (``submit_conf``)."""
+    advisory_mb = os.environ.get("SPARK_GRAFT_ADVISORY_MB", "8")
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # let AQE re-optimize (and in particular COALESCE) the plans
+        # that fill persisted relations: the dedup operators persist
+        # several small intermediates (tagged band index, candidate
+        # pairs), and with this off each cache materializes at the
+        # full static shuffle width, so every downstream consumer
+        # stage inherits cores-many near-empty partitions (r6
+        # event-log capture: five 96-task stages per flagship run
+        # whose tasks carry ~6 KB each). Nothing here relies on cache
+        # output partitioning lining up with a later join.
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": os.environ.get(
+            "SPARK_GRAFT_CACHE_AQE", "true"
+        ),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": f"{advisory_mb}m",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Arrow batch size gates how well the JVM producer and the
+        # python worker overlap: a task that holds only 1-2 batches
+        # serializes the two sides (JVM idles while python crunches
+        # the one giant batch and vice versa — measured r6 at 300k
+        # docs/local[8]: 12.5k-doc tasks with 10k-row batches ran the
+        # signature stage at ~55% core utilization; 2k-row batches cut
+        # the flagship 51s -> 31s). 2000 rows x ~400 tokens x 8 B is
+        # ~6 MB of token-hash payload per batch — big enough that
+        # per-batch dispatch (~ms) stays noise, small enough that
+        # every task pipelines several batches.
+        "spark.sql.execution.arrow.maxRecordsPerBatch": os.environ.get(
+            "SPARK_GRAFT_ARROW_BATCH", "2000"
+        ),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+
+
+def submit_conf(
+    launch_conf: Mapping[str, str],
+    default_parallelism: int,
+    job_defaults: Mapping[str, str] | None = None,
+) -> dict[str, str]:
+    """Runtime settings a spark-submit job applies to its running
+    session: the tuned defaults (plus ``job_defaults``) for every key
+    its launch conf left unset. A value given with ``--conf`` or in
+    spark-defaults wins, and the master is the submit's choice."""
+    defaults = {
+        **tuned_sql_conf(max(default_parallelism, 8)),
+        **(job_defaults or {}),
+    }
+    return {k: v for k, v in defaults.items() if k not in launch_conf}
 
 
 def _master_threads(master: str, default: int) -> int:

@@ -8,6 +8,13 @@
 # Cluster (N and 4N executors for the scaling measurement):
 #   SPARK_MASTER=yarn EXECUTORS=250 scripts/submit.sh --input s3://...  \
 #     --workdir s3://.../warehouse --run-id prod-2025-06-01
+#
+# The job applies the engine's tuned session defaults (session.py
+# tuned_sql_conf: shuffle width, AQE advisory size, Arrow batch size, ...)
+# to every setting this launch leaves unset. A --conf key=value on the
+# spark-submit line below (add it to EXTRA) or a spark-defaults.conf entry
+# overrides the job's default, e.g. on a cluster
+#   EXTRA+=(--conf spark.sql.shuffle.partitions=2000)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
