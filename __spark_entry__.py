@@ -721,7 +721,7 @@ def q_near_dup_pairs(spark, sf):
     docs = _t(spark, sf, "documents")
     sig = add_signatures(docs, DEDUP_CFG).persist()
     cand = candidate_pairs(sig, DEDUP_CFG)
-    return verify_pairs(cand, sig, DEDUP_CFG, exact=True)
+    return verify_pairs(cand, sig, DEDUP_CFG)
 
 
 def q_near_dup_clusters(spark, sf):

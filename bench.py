@@ -163,28 +163,11 @@ def build_suite():
     def docs(spark):
         return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
-    def near_dup_pairs_default(s):
-        """Production-shaped pair generation (candidate_pairs +
-        exact verify_pairs) outside the declared-query harness. Since
-        the exact path lost its signature prefilter it runs the same
-        plan as near_dup_pairs."""
-        from fuzzy_matcher_spark.operators.dedup_minhash import (
-            add_signatures,
-            candidate_pairs,
-            verify_pairs,
-        )
-
-        sig = add_signatures(docs(s), cfg).persist()
-        return verify_pairs(
-            candidate_pairs(sig, cfg), sig, cfg, exact=True
-        ).count()
-
     return {
         "minhash_dedup_docs": lambda s: minhash_dedup(docs(s), cfg).count(),
         "simhash_dedup_docs": lambda s: simhash_dedup(docs(s), cfg).count(),
         "exact_dedup_docs": lambda s: exact_clusters(docs(s), "text", "doc_id").count(),
         "near_dup_pairs": lambda s: E.q_near_dup_pairs(s, SF_DIR).count(),
-        "near_dup_pairs_default": near_dup_pairs_default,
         "tpch_q1": lambda s: E.q_tpch_q1(s, SF_DIR).count(),
         "topk_orders": lambda s: E.q_topk_orders_per_customer(s, SF_DIR).count(),
         "events_hourly": lambda s: E.q_events_hourly(s, SF_DIR).count(),

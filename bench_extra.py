@@ -36,12 +36,7 @@ def build_frames():
     import __spark_entry__ as E
     from fuzzy_matcher_spark.config import DedupConfig
     from fuzzy_matcher_spark.operators.dedup_exact import exact_clusters
-    from fuzzy_matcher_spark.operators.dedup_minhash import (
-        add_signatures,
-        candidate_pairs,
-        minhash_dedup,
-        verify_pairs,
-    )
+    from fuzzy_matcher_spark.operators.dedup_minhash import minhash_dedup
     from fuzzy_matcher_spark.operators.dedup_simhash import simhash_dedup
 
     cfg = DedupConfig(shingle_mode="word", shingle_size=4, jaccard_threshold=0.8)
@@ -49,16 +44,11 @@ def build_frames():
     def docs(s):
         return s.read.parquet(f"{SF_DIR}/documents.parquet")
 
-    def near_dup_pairs_default(s):
-        sig = add_signatures(docs(s), cfg).persist()
-        return verify_pairs(candidate_pairs(sig, cfg), sig, cfg, exact=True)
-
     return {
         "minhash_dedup_docs": lambda s: minhash_dedup(docs(s), cfg),
         "simhash_dedup_docs": lambda s: simhash_dedup(docs(s), cfg),
         "exact_dedup_docs": lambda s: exact_clusters(docs(s), "text", "doc_id"),
         "near_dup_pairs": lambda s: E.q_near_dup_pairs(s, SF_DIR),
-        "near_dup_pairs_default": near_dup_pairs_default,
         "tpch_q1": lambda s: E.q_tpch_q1(s, SF_DIR),
         "topk_orders": lambda s: E.q_topk_orders_per_customer(s, SF_DIR),
         "events_hourly": lambda s: E.q_events_hourly(s, SF_DIR),

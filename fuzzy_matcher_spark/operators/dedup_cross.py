@@ -24,15 +24,14 @@ Plan shape (the 100 TB story):
   silent.
 - Verification reuses dedup_minhash.verify_pairs (explode-by-side ->
   ONE join -> ONE groupBy, candidate-volume-sized shuffle). The two
-  corpora may use overlapping id spaces, so ids are remapped to a
-  disjoint synthetic space (2*id / 2*id+1) around the verifier and
-  decoded after — ids must fit in 62 bits, which a 10^12-doc corpus
-  clears by nine orders of magnitude.
+  corpora may use overlapping id spaces, so around the verifier each
+  id becomes a side-tagged struct (s: 0 index / 1 probe, i: id) —
+  valid over the full int64 range, no id arithmetic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -123,13 +122,17 @@ def _narrow_signatures(
     return add_signatures(df, cfg, text_col, id_col).select(id_col, "signature")
 
 
+def _tagged(side: int, id_col: str) -> Column:
+    """The verifier's id for one side: struct(s: side, i: id)."""
+    return F.struct(F.lit(side).alias("s"), F.col(id_col).alias("i"))
+
+
 def cross_dup_pairs(
     index_docs: DataFrame,
     probe_docs: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    single_pass: bool | None = None,
 ) -> DataFrame:
     """(index_id, probe_id, jaccard) for every cross-corpus pair with
     exact Jaccard >= cfg.jaccard_threshold among LSH band candidates.
@@ -138,39 +141,57 @@ def cross_dup_pairs(
     contract) — they can never be near-duplicates of anything, and
     ``cross_dedup_keep`` therefore always keeps them.
 
-    ``single_pass`` (r6): the signature subtrees feed two consumers
-    (band index + verifier values), so the LAZY shape evaluates each
-    side's signature UDF pass twice. With ``single_pass`` each side
-    runs ONCE into a persisted NARROW (id, signature) relation and the
-    wide shingle sets are recomputed for CANDIDATE ids only via
-    verify_pairs' shingle_builder semi-join — at corpus scale that
-    halves the scan+UDF cost and keeps the verify join narrow. It
-    costs ~10 extra scheduler jobs (cache fills, semi-joins), pure
-    fixed overhead when the input is tiny (measured at sf0.1:
-    1.4s lazy vs 3.9s single-pass — all barrier/job cost, no data).
-    Default (None): single-pass iff the combined input-plan estimate
-    >= _EAGER_STATS_MIN_BYTES, i.e. exactly when recompute could cost
-    more than scheduling; unknown stats (RDD-backed inputs) choose
-    single-pass, the conservative-at-scale side. Results are
+    Two shapes, chosen by the combined input-plan estimate (r6). The
+    signature subtrees feed two consumers (band index + verifier
+    values). At scale (>= _EAGER_STATS_MIN_BYTES; unknown stats of
+    RDD-backed inputs count as at scale) each side runs ONCE into a
+    persisted NARROW (id, signature) relation, the wide shingle sets
+    are rebuilt for CANDIDATE ids only (verify_pairs' builder
+    semi-join), and the pairs are counted before the verify join —
+    halving the scan+UDF cost and keeping the verify join narrow.
+    Below it the LAZY shape evaluates each side's add_signatures twice
+    and skips the count: the single-pass shape's ~10 extra scheduler
+    jobs (cache fills, semi-joins) are pure fixed overhead on a tiny
+    input (measured at sf0.1: 1.4s lazy vs 3.9s single-pass), and a
+    mis-broadcast at that scale is tens of MiB at worst. Results are
     identical on both paths (both oracle-checked)."""
     release_caches()  # free the previous dedup invocation's caches
-    if single_pass is None:
-        single_pass = (
-            plan_size_bytes(index_docs) + plan_size_bytes(probe_docs)
-            >= _EAGER_STATS_MIN_BYTES
-        )
-    if not single_pass:
-        return _cross_dup_pairs_lazy(
-            index_docs, probe_docs, cfg, id_col, text_col
-        )
-    sig_i = _register_cache(
-        _narrow_signatures(index_docs, cfg, text_col, id_col).persist()
+    at_scale = (
+        plan_size_bytes(index_docs) + plan_size_bytes(probe_docs)
+        >= _EAGER_STATS_MIN_BYTES
     )
-    sig_p = _register_cache(
-        _narrow_signatures(probe_docs, cfg, text_col, id_col).persist()
-    )
-    bi = explode_bands(sig_i, id_col, cfg)
-    bp = explode_bands(sig_p, id_col, cfg)
+    sides = (index_docs, probe_docs)
+    if at_scale:
+        sigs = [
+            _register_cache(_narrow_signatures(d, cfg, text_col, id_col).persist())
+            for d in sides
+        ]
+
+        def values(cand_ids: DataFrame) -> DataFrame:
+            # semi-join each raw corpus down to its candidate-touched
+            # docs BEFORE the tokenize/gram-mix pass
+            sets = [
+                _shingle_sets(
+                    d.join(
+                        cand_ids.where(F.col(f"{id_col}.s") == s).select(
+                            F.col(f"{id_col}.i").alias(id_col)
+                        ),
+                        id_col,
+                        "left_semi",
+                    ),
+                    cfg,
+                    text_col,
+                    id_col,
+                    parallelize=False,
+                )
+                for s, d in enumerate(sides)
+            ]
+            return _union_tagged(sets, id_col)
+
+    else:
+        sigs = [add_signatures(d, cfg, text_col, id_col) for d in sides]
+        values = _union_tagged(sigs, id_col)
+    bi, bp = (explode_bands(sig, id_col, cfg) for sig in sigs)
     cand = capped_cross_join_pairs(
         bi,
         bp,
@@ -180,118 +201,22 @@ def cross_dup_pairs(
         a_out="index_id",
         b_out="probe_id",
     )
-    # disjoint synthetic id space around the shared verifier (the two
-    # corpora may reuse ids); decoded right back after the verdict
-    two = F.lit(2)
-    pairs_v = cand.select(
-        (F.col("index_id") * two).alias("a"),
-        (F.col("probe_id") * two + 1).alias("b"),
+    pairs = cand.select(
+        _tagged(0, "index_id").alias("a"), _tagged(1, "probe_id").alias("b")
     )
-
-    def _builder(cand_ids: DataFrame) -> DataFrame:
-        # cand_ids carries SYNTHETIC ids; decode per side, semi-join
-        # the raw corpus down to candidate-touched docs BEFORE the
-        # tokenize/gram-mix pass, re-encode on the way out
-        idx_ids = cand_ids.where(F.col(id_col) % two == 0).select(
-            F.shiftright(id_col, 1).alias(id_col)
-        )
-        prb_ids = cand_ids.where(F.col(id_col) % two == 1).select(
-            F.shiftright(id_col, 1).alias(id_col)
-        )
-        si = _shingle_sets(
-            index_docs.join(idx_ids, id_col, "left_semi"),
-            cfg,
-            text_col,
-            id_col,
-            parallelize=False,
-        )
-        sp = _shingle_sets(
-            probe_docs.join(prb_ids, id_col, "left_semi"),
-            cfg,
-            text_col,
-            id_col,
-            parallelize=False,
-        )
-        return si.select(
-            (F.col(id_col) * two).alias(id_col), "shingle_hashes"
-        ).unionByName(
-            sp.select((F.col(id_col) * two + 1).alias(id_col), "shingle_hashes")
-        )
-
-    # sig_df is only consumed on the exact=False path; the exact path
-    # reads its values from the shingle_builder's candidate-sized sets
-    sig_v = sig_i.select(
-        (F.col(id_col) * two).alias(id_col), "signature"
-    ).unionByName(
-        sig_p.select((F.col(id_col) * two + 1).alias(id_col), "signature")
-    )
-    verified = verify_pairs(
-        pairs_v, sig_v, cfg, id_col=id_col, exact=True, shingle_builder=_builder
-    )
-    # decode: a = 2*index_id (even), b = 2*probe_id + 1 (odd) — a
-    # right shift is exact at any id magnitude (float division is not
-    # above 2^53)
+    verified = verify_pairs(pairs, values, cfg, id_col, materialize=at_scale)
     return verified.select(
-        F.shiftright("a", 1).alias("index_id"),
-        F.shiftright("b", 1).alias("probe_id"),
-        "jaccard",
+        F.col("a.i").alias("index_id"), F.col("b.i").alias("probe_id"), "jaccard"
     )
 
 
-def _cross_dup_pairs_lazy(
-    index_docs: DataFrame,
-    probe_docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """The small-input shape: unpersisted signature subtrees feeding
-    bands and verifier values directly. Each side's UDF pass is
-    evaluated twice, but below _EAGER_STATS_MIN_BYTES that recompute
-    is cheaper than the single-pass shape's cache/semi-join jobs (see
-    cross_dup_pairs docstring)."""
-    sig_i = add_signatures(index_docs, cfg, text_col, id_col)
-    sig_p = add_signatures(probe_docs, cfg, text_col, id_col)
-    bi = explode_bands(sig_i, id_col, cfg)
-    bp = explode_bands(sig_p, id_col, cfg)
-    cand = capped_cross_join_pairs(
-        bi,
-        bp,
-        ["band_id", "band_hash"],
-        id_col,
-        cfg.max_band_bucket,
-        a_out="index_id",
-        b_out="probe_id",
+def _union_tagged(sets: list[DataFrame], id_col: str) -> DataFrame:
+    """(tagged id, shingle_hashes) over both sides' (id, shingle_hashes)."""
+    index_sets, probe_sets = (
+        df.select(_tagged(s, id_col).alias(id_col), "shingle_hashes")
+        for s, df in enumerate(sets)
     )
-    # disjoint synthetic id space around the shared verifier (the two
-    # corpora may reuse ids); decoded right back after the verdict
-    two = F.lit(2)
-    pairs_v = cand.select(
-        (F.col("index_id") * two).alias("a"),
-        (F.col("probe_id") * two + 1).alias("b"),
-    )
-    values_v = sig_i.select(
-        (F.col(id_col) * two).alias(id_col), "shingle_hashes", "signature"
-    ).unionByName(
-        sig_p.select(
-            (F.col(id_col) * two + 1).alias(id_col),
-            "shingle_hashes",
-            "signature",
-        )
-    )
-    # materialize=False: this branch only runs below
-    # _EAGER_STATS_MIN_BYTES (cross_dup_pairs gates on the input-plan
-    # estimate), so the pairs-count AQE barrier buys nothing — a
-    # mis-broadcast at this scale is tens of MiB at worst, exactly the
-    # minhash_dedup small-input reasoning (its materialize=eager_stats)
-    verified = verify_pairs(
-        pairs_v, values_v, cfg, id_col=id_col, exact=True, materialize=False
-    )
-    return verified.select(
-        F.shiftright("a", 1).alias("index_id"),
-        F.shiftright("b", 1).alias("probe_id"),
-        "jaccard",
-    )
+    return index_sets.unionByName(probe_sets)
 
 
 def cross_dedup_keep(

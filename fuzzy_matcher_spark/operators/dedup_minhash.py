@@ -7,11 +7,13 @@ Stages (all lazy DataFrame transformations until the sink):
 3. band index          — JVM xxhash64 over signature slices + posexplode
 4. candidate pairs     — self-equi-join on (band_id, band_hash) with
                          explicit skew control (below)
-5. verification        — signature-agreement estimate (pure JVM) as a
-                         prefilter, exact Jaccard (numpy pandas UDF over
-                         the two shingle-hash sets) as the decision
+5. verification        — exact Jaccard (numpy pandas UDF over the two
+                         shingle-hash sets)
 6. exact-dup pairs     — unioned in (operators/dedup_exact.py)
 7. clustering          — large-star/small-star CC
+
+minhash_dedup runs these stages through the shared stage graph
+(plans/graph.py), the same graph the checkpointed DedupPipeline runs.
 
 Skew control (SURVEY.md §4.3): web boilerplate creates band buckets
 with thousands of members; an uncapped self-join is O(n^2) per bucket.
@@ -35,7 +37,7 @@ plays the role of fuzzy_matcher_core.go:220-260.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,7 +48,6 @@ from pyspark.sql import types as T
 from fuzzy_matcher_spark.config import DedupConfig
 from fuzzy_matcher_spark.functions.minhash import (
     explode_bands,
-    sig_agreement_col,
     signature_col,
     token_gram_minhash_udf,
     token_gram_sets_udf,
@@ -56,11 +57,7 @@ from fuzzy_matcher_spark.functions.shingles import (
     add_shingle_hashes,
     token_hashes_col,
 )
-from fuzzy_matcher_spark.operators.connected_components import connected_components
-from fuzzy_matcher_spark.operators.dedup_exact import (
-    exact_key,
-    star_pairs_from_keys,
-)
+from fuzzy_matcher_spark.operators.dedup_exact import exact_key
 from fuzzy_matcher_spark.operators.pairs import capped_self_join_pairs
 
 
@@ -253,7 +250,8 @@ def _signatures_with_exact_key(
     df: DataFrame, cfg: DedupConfig, text_col: str, id_col: str
 ) -> DataFrame:
     """(id, _ek, n_units, signature) over ALL docs — the NARROW
-    single-scan relation minhash_dedup persists (~1.1 KB/doc).
+    single-scan signatures stage of the dedup graph (~1.1 KB/doc),
+    persisted by minhash_dedup and checkpointed by DedupPipeline.
 
     Unlike add_signatures, zero-token docs are KEPT (empty gram set ->
     sentinel signature, n_units = 0; banding filters on n_units > 0
@@ -323,35 +321,45 @@ def _shingle_sets(
     ).select(F.col(id_col), "shingle_hashes")
 
 
+def band_index(
+    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
+) -> tuple[DataFrame, list[str]]:
+    """(band index, bucket keys) of an (id, signature) relation — one
+    row per (doc, band)."""
+    return explode_bands(sig_df, id_col, cfg), ["band_id", "band_hash"]
+
+
 def candidate_pairs(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
     """Self-join the band index with bucket-size capping. Returns
     distinct (a, b) with a < b."""
-    idx = explode_bands(sig_df, id_col, cfg)
-    return capped_self_join_pairs(
-        idx, ["band_id", "band_hash"], id_col, cfg.max_band_bucket
-    )
+    idx, keys = band_index(sig_df, cfg, id_col)
+    return capped_self_join_pairs(idx, keys, id_col, cfg.max_band_bucket)
 
 
 def verify_pairs(
     pairs: DataFrame,
-    sig_df: DataFrame,
+    values: DataFrame | Callable[[DataFrame], DataFrame],
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    exact: bool = True,
-    shingle_df: DataFrame | None = None,
-    shingle_builder=None,
     materialize: bool = True,
 ) -> DataFrame:
-    """(a, b, jaccard) for pairs passing the threshold.
+    """(a, b, jaccard) for pairs whose exact Jaccard over the
+    shingle-hash sets (vectorized pandas UDF) passes the threshold.
+
+    ``values`` supplies the sets: an (id, shingle_hashes) DataFrame
+    (e.g. add_signatures output), or a function that receives the
+    DISTINCT candidate ids as a one-column DataFrame and returns that
+    relation for them — so a caller can rebuild the sets from raw text
+    for candidate-touched docs only (the builder semi-joins the corpus
+    down to those ids BEFORE tokenizing, so the pass costs candidate
+    volume, not corpus volume; pairs is persisted+counted, so AQE
+    broadcasts the narrow id set into the semi-join). Ids may be any
+    orderable type, e.g. side-tagged structs (dedup_cross).
 
     Emits ONE row per distinct surviving (a, b) — duplicate input
     pairs are tolerated and collapse. Precondition: ``id_col`` is
-    unique in the value relation (sig_df / shingle_df); duplicate ids
-    with differing values raise 'Duplicate map key'.
-
-    exact=True decides with exact Jaccard over the shingle-hash sets
-    (vectorized pandas UDF); exact=False decides with the JVM
-    signature-agreement estimate alone (cheaper; documented bias).
+    unique in the value relation; duplicate ids with differing values
+    raise 'Duplicate map key'.
 
     Join shape (the 100 TB-relevant part). A naive pairs -> side_a ->
     side_b join chain drags wide array columns through a cascade of
@@ -360,18 +368,17 @@ def verify_pairs(
     exchanges at 300k docs, and before the semi-join era the planner
     once broadcast the full wide table — driver OOM at 300k/8g).
     Instead the pair list is EXPLODED to one narrow row per pair SIDE
-    (a, b, id), inner-joined ONCE against the signature relation (the
+    (a, b, id), inner-joined ONCE against the value relation (the
     join prunes to candidate-touched ids, subsuming the old semi-join;
     with pairs persisted+counted AQE broadcasts the narrow exploded
     side and the wide table is streamed in place), and the two sides
     are recombined by a single groupBy(a, b) — exactly ONE wide
     shuffle, sized by candidate volume, not corpus size.
 
-    The old signature-agreement PREfilter (est >= threshold - margin
-    before the exact check) is gone from the exact path: its only
-    savings was python time on non-survivors, worth ~10us/pair to the
-    numpy set-intersection kernel, while costing a second wide join
-    pass.
+    No signature-agreement prefilter runs before the exact check: it
+    would save only python time on non-survivors, worth ~10us/pair to
+    the numpy set-intersection kernel, while costing a second wide
+    join pass.
 
     ``pairs`` is persisted here: it is consumed twice (explode +
     downstream reuse by callers), and an unpersisted candidate
@@ -386,30 +393,11 @@ def verify_pairs(
     pairs = _register_cache(pairs.persist())
     if materialize:
         pairs.count()
-    # the value relation: signatures for the estimate path, shingle
-    # sets for the exact path. shingle_df lets minhash_dedup keep its
-    # persisted relation NARROW (no wide shingle column in the cache)
-    # and feed the sets from a one-shot pure-JVM recompute instead;
-    # default: read them off sig_df (add_signatures carries both)
-    if exact:
-        if shingle_builder is not None:
-            # build the shingle sets for CANDIDATE ids only: the
-            # builder semi-joins the raw corpus down to ids that
-            # appear in a pair BEFORE tokenizing/gram-mixing, so the
-            # set-recompute pass costs candidate volume, not corpus
-            # volume (pairs is persisted+counted, so AQE broadcasts
-            # the narrow id set into the semi-join)
-            cand_ids = pairs.select(
-                F.explode(F.array("a", "b")).alias(id_col)
-            ).distinct()
-            source = shingle_builder(cand_ids)
-        else:
-            source = shingle_df if shingle_df is not None else sig_df
-        values = source.select(F.col(id_col), F.col("shingle_hashes"))
-        val = "shingle_hashes"
-    else:
-        values = sig_df.select(F.col(id_col), F.col("signature"))
-        val = "signature"
+    if callable(values):
+        values = values(
+            pairs.select(F.explode(F.array("a", "b")).alias(id_col)).distinct()
+        )
+    values = values.select(F.col(id_col), F.col("shingle_hashes"))
     exploded = pairs.select(
         "a", "b", F.explode(F.array("a", "b")).alias(id_col)
     )
@@ -435,7 +423,7 @@ def verify_pairs(
     per_pair = tagged.groupBy("a", "b").agg(
         F.map_from_entries(
             F.array_distinct(
-                F.collect_list(F.struct(F.col(id_col), F.col(val)))
+                F.collect_list(F.struct(F.col(id_col), F.col("shingle_hashes")))
             )
         ).alias("_m")
     ).select(
@@ -444,25 +432,20 @@ def verify_pairs(
         F.col("_m")[F.col("a")].alias("_va"),
         F.col("_m")[F.col("b")].alias("_vb"),
     )
-    if exact:
-        scored = per_pair.withColumn("jaccard", jaccard_udf("_va", "_vb"))
-    else:
-        scored = per_pair.withColumn(
-            "jaccard", sig_agreement_col("_va", "_vb", cfg.num_perm)
-        )
+    scored = per_pair.withColumn("jaccard", jaccard_udf("_va", "_vb"))
     return scored.where(F.col("jaccard") >= cfg.jaccard_threshold).select(
         "a", "b", "jaccard"
     )
 
 
-# above this input-scan estimate, minhash_dedup eagerly materializes
-# the persisted signatures so join planning sees exact
-# InMemoryRelation sizes. 32 MiB of raw text is ~30k web docs, whose
-# wide signature relation (~2 KiB/doc: 128 longs + shingle hashes) is
-# the smallest that could plausibly be mis-broadcast; below it a wrong
-# broadcast is <= tens of MiB (harmless), so the materialization
-# barrier — measured ~1.9s of the sf0.1 flagship wall (r2 regression)
-# — is skipped.
+# above this input-scan estimate the dedup stage graph
+# (plans/graph.at_scale) eagerly materializes the persisted signatures
+# and the candidate pairs so join planning sees exact sizes. 32 MiB of
+# raw text is ~30k web docs, whose wide signature relation (~2 KiB/doc:
+# 128 longs + shingle hashes) is the smallest that could plausibly be
+# mis-broadcast; below it a wrong broadcast is <= tens of MiB
+# (harmless), so the materialization barrier — measured ~1.9s of the
+# sf0.1 flagship wall (r2 regression) — is skipped.
 _EAGER_STATS_MIN_BYTES = 32 << 20
 
 
@@ -471,80 +454,25 @@ def minhash_dedup(
     cfg: DedupConfig | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    include_exact: bool = True,
-    exact_verify: bool = True,
-    eager_stats: bool | None = None,
 ) -> DataFrame:
     """End-to-end: docs -> (id, cluster_id). cluster_id = min id of the
-    near-duplicate connected component; singletons map to themselves.
+    near-duplicate connected component (near-dup edges plus exact-dup
+    star pairs); singletons, including zero-token docs, map to
+    themselves.
 
-    ``eager_stats``: signatures feed three consumers (band index +
-    both verify sides); they are always persisted so the pandas-UDF
-    hop runs once. Materializing them EAGERLY additionally gives
-    downstream join planning exact InMemoryRelation stats — scan-based
-    estimates miss array expansion and once led the planner to
-    broadcast the wide table (driver OOM at 300k docs/8g; see
-    verify_pairs docstring) — but costs a full materialization
-    barrier, which at small scale dominates (the r2 flagship
-    regression). Default (None): eager iff the input-plan estimate
-    >= _EAGER_STATS_MIN_BYTES, i.e. exactly when a mis-planned
-    broadcast could be large enough to matter."""
-    cfg = cfg or DedupConfig()
-    cfg.validate()
+    The in-memory run of the dedup stage graph (plans/graph.py): one
+    scan of the text builds the NARROW (id, _ek, n_units, signature)
+    relation, which feeds banding, the exact star pairs and the final
+    id roster. It is the only stage persisted, so the pandas-UDF hop
+    runs once; it is counted eagerly only at scale
+    (_EAGER_STATS_MIN_BYTES), where exact InMemoryRelation stats keep
+    the planner from broadcasting a wide table (driver OOM at 300k
+    docs/8g; see verify_pairs) — below it the barrier dominates (the
+    r2 flagship regression). The wide shingle sets are recomputed once
+    for exact verification (_shingle_sets)."""
+    from fuzzy_matcher_spark.plans.graph import cache_policy, dedup_graph
+
     release_caches()  # free the previous call's cached relations
-    if eager_stats is None:
-        eager_stats = plan_size_bytes(df) >= _EAGER_STATS_MIN_BYTES
-    # one scan of the raw corpus feeds banding, the exact star pairs,
-    # and the final id roster through the persisted NARROW relation
-    # (id, _ek, n_units, signature); the wide shingle sets are
-    # recomputed once, JVM-only, for exact verification (_shingle_sets)
-    full = _register_cache(
-        _signatures_with_exact_key(df, cfg, text_col, id_col).persist()
-    )
-    if eager_stats:
-        full.count()
-    sig_df = full.where(F.col("n_units") > 0)
-    pairs = candidate_pairs(sig_df, cfg, id_col)
-    # below the eager_stats scale the candidate-pruned shingle rebuild
-    # (cand_ids distinct + semi-join before the gram pass) costs more
-    # scheduler jobs than the full-corpus recompute it avoids — a
-    # small corpus feeds the sets lazily from one unpruned pass
-    # instead, and skips the pairs-count AQE barrier for the same
-    # reason (verify_pairs docstring). Results are identical; only
-    # which ids get their gram sets rebuilt changes.
-    verified = verify_pairs(
-        pairs,
-        sig_df,
-        cfg,
-        id_col,
-        exact=exact_verify,
-        shingle_builder=(
-            lambda cand_ids: _shingle_sets(
-                df.join(cand_ids, id_col, "left_semi"),
-                cfg,
-                text_col,
-                id_col,
-                parallelize=False,
-            )
-        )
-        if (exact_verify and eager_stats)
-        else None,
-        shingle_df=_shingle_sets(df, cfg, text_col, id_col)
-        if (exact_verify and not eager_stats)
-        else None,
-        materialize=eager_stats,
-    )
-    edge_df = verified.select("a", "b")
-    if include_exact:
-        edge_df = edge_df.union(
-            star_pairs_from_keys(full.select(id_col, "_ek"), id_col)
-        ).distinct()
-    comp = connected_components(edge_df, max_iter=cfg.cc_max_iter)
-    all_ids = full.select(F.col(id_col))
-    return (
-        all_ids.join(comp, all_ids[id_col] == comp["id"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-        )
+    return dedup_graph(
+        df, cfg or DedupConfig(), "minhash", id_col, text_col, cache_policy(df)
     )

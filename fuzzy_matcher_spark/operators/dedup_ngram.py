@@ -20,10 +20,10 @@ from pyspark.sql import functions as F
 
 from fuzzy_matcher_spark.config import DedupConfig
 from fuzzy_matcher_spark.functions.shingles import add_shingle_hashes
-from fuzzy_matcher_spark.operators.connected_components import connected_components
-from fuzzy_matcher_spark.operators.dedup_exact import exact_pairs
+from fuzzy_matcher_spark.operators.dedup_exact import exact_key
 from fuzzy_matcher_spark.operators.dedup_minhash import jaccard_udf
 from fuzzy_matcher_spark.operators.pairs import capped_self_join_pairs
+from fuzzy_matcher_spark.plans.graph import at_scale, cluster
 
 
 def ngram_candidates(
@@ -81,27 +81,14 @@ def ngram_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     sample_mod: int = 8,
-    include_exact: bool = True,
 ) -> DataFrame:
     cfg = cfg or DedupConfig()
     hashes, pairs = ngram_candidates(df, cfg, text_col, id_col, sample_mod)
     hashes = hashes.persist()
     # exact stats for the verify joins (never broadcast the wide side);
-    # conditional like minhash_dedup — the barrier only pays for itself
-    # when a mis-planned broadcast could be large
-    from fuzzy_matcher_spark.operators.dedup_minhash import (
-        _EAGER_STATS_MIN_BYTES,
-        plan_size_bytes,
-    )
-
-    if plan_size_bytes(df) >= _EAGER_STATS_MIN_BYTES:
+    # conditional like the dedup graph's signatures — the barrier only
+    # pays for itself when a mis-planned broadcast could be large
+    if at_scale(df):
         hashes.count()
-    verified = ngram_verify(pairs, hashes, cfg, id_col).select("a", "b")
-    if include_exact:
-        verified = verified.union(exact_pairs(df, text_col, id_col)).distinct()
-    comp = connected_components(verified, max_iter=cfg.cc_max_iter)
-    ids = df.select(F.col(id_col))
-    return ids.join(comp, ids[id_col] == comp["id"], "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-    )
+    verified = ngram_verify(pairs, hashes, cfg, id_col)
+    return cluster(verified, exact_key(df, text_col), cfg, id_col)

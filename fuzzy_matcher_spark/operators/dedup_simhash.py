@@ -2,7 +2,8 @@
 
 Pipeline: shingle hashes (JVM) -> 64-bit SimHash (numpy pandas UDF) ->
 bit-slice bucket index (JVM) -> capped self-join -> Hamming verify
-(bit_count(a XOR b), pure JVM) -> union exact pairs -> CC.
+(bit_count(a XOR b), pure JVM) -> union exact pairs -> CC, run through
+the shared stage graph (plans/graph.py).
 
 With ``tables`` bit slices, any pair within Hamming distance
 (tables - 1) shares at least one full slice (pigeonhole), so candidate
@@ -21,16 +22,8 @@ from fuzzy_matcher_spark.functions.simhash import (
     hamming_col,
     simhash64_udf,
 )
-from fuzzy_matcher_spark.operators.cachereg import (
-    register_cache as _register_cache,
-)
 from fuzzy_matcher_spark.operators.cachereg import release_caches
-from fuzzy_matcher_spark.operators.connected_components import connected_components
-from fuzzy_matcher_spark.operators.dedup_exact import (
-    exact_key,
-    exact_pairs,
-    star_pairs_from_keys,
-)
+from fuzzy_matcher_spark.operators.dedup_exact import exact_key
 from fuzzy_matcher_spark.operators.pairs import capped_self_join_pairs
 
 
@@ -60,6 +53,41 @@ def add_fingerprints(
     )
 
 
+def fingerprints_with_exact_key(
+    df: DataFrame, cfg: DedupConfig, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, _ek, fingerprint) over ALL docs from one scan of the text —
+    the simhash signatures stage of the dedup graph. Zero-token docs
+    keep a NULL fingerprint (they must not cluster by shared sentinel
+    fingerprints) but still carry their exact-dup key and their row in
+    the roster."""
+    from fuzzy_matcher_spark.operators.dedup_minhash import (
+        _has_tokens,
+        ensure_parallelism,
+    )
+
+    keyed = exact_key(ensure_parallelism(df), text_col)
+    hashed = add_shingle_hashes(
+        keyed, cfg.shingle_mode, cfg.shingle_size, text_col, out="_h"
+    )
+    return hashed.select(
+        F.col(id_col),
+        "_ek",
+        F.when(_has_tokens(text_col), simhash64_udf(F.col("_h"))).alias(
+            "fingerprint"
+        ),
+    )
+
+
+def slice_index(
+    fp_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
+) -> tuple[DataFrame, list[str]]:
+    """(bit-slice index, bucket keys) of an (id, fingerprint) relation
+    — one row per (doc, table), carrying the fingerprint."""
+    idx = explode_slices(fp_df, id_col, "fingerprint", cfg.simhash_tables)
+    return idx, ["table_id", "slice_key"]
+
+
 def simhash_candidate_pairs(
     fp_df: DataFrame,
     cfg: DedupConfig,
@@ -78,15 +106,10 @@ def simhash_candidate_pairs(
             "pigeonhole guarantee requires hamming_max <= tables - 1 "
             f"(got r={cfg.simhash_hamming_max}, tables={cfg.simhash_tables})"
         )
-    keep = ["table_id", "slice_key", id_col] + (
-        ["fingerprint"] if with_fingerprints else []
-    )
-    idx = explode_slices(fp_df, id_col, "fingerprint", cfg.simhash_tables).select(
-        *keep
-    )
+    idx, keys = slice_index(fp_df, cfg, id_col)
     return capped_self_join_pairs(
         idx,
-        ["table_id", "slice_key"],
+        keys,
         id_col,
         cfg.max_band_bucket,
         payload="fingerprint" if with_fingerprints else None,
@@ -126,46 +149,16 @@ def simhash_dedup(
     cfg: DedupConfig | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    include_exact: bool = True,
 ) -> DataFrame:
-    """Single-scan shape (mirrors minhash_dedup): one pass over raw
-    text produces (id, _ek, fingerprint) for ALL docs — zero-token
-    docs keep a NULL fingerprint (they must not cluster by shared
-    sentinel fingerprints) but still contribute their exact-dup key
-    and their row in the final roster, so neither the exact pairs nor
-    the id roster re-scans the corpus."""
-    from fuzzy_matcher_spark.operators.dedup_minhash import (
-        _has_tokens,
-        ensure_parallelism,
-    )
+    """docs -> (id, cluster_id), the in-memory run of the dedup stage
+    graph (plans/graph.py) in simhash mode: one scan of the text builds
+    (id, _ek, fingerprint) for ALL docs (fingerprints_with_exact_key),
+    persisted as the only cached stage; it feeds the bit-slice index,
+    the exact star pairs and the final id roster, so neither re-scans
+    the corpus."""
+    from fuzzy_matcher_spark.plans.graph import cache_policy, dedup_graph
 
-    cfg = cfg or DedupConfig()
-    release_caches()  # free the previous pipeline invocation's caches
-    keyed = exact_key(ensure_parallelism(df), text_col)
-    hashed = add_shingle_hashes(
-        keyed, cfg.shingle_mode, cfg.shingle_size, text_col, out="_h"
-    )
-    fp_full = _register_cache(
-        hashed.select(
-            F.col(id_col),
-            "_ek",
-            F.when(
-                _has_tokens(text_col), simhash64_udf(F.col("_h"))
-            ).alias("fingerprint"),
-        ).persist()
-    )
-    fp_df = fp_full.where(F.col("fingerprint").isNotNull()).select(
-        id_col, "fingerprint"
-    )
-    pairs = simhash_candidate_pairs(fp_df, cfg, id_col)
-    verified = simhash_verify(pairs, fp_df, cfg, id_col).select("a", "b")
-    if include_exact:
-        verified = verified.union(
-            star_pairs_from_keys(fp_full.select(id_col, "_ek"), id_col)
-        ).distinct()
-    comp = connected_components(verified, max_iter=cfg.cc_max_iter)
-    all_ids = fp_full.select(F.col(id_col))
-    return all_ids.join(comp, all_ids[id_col] == comp["id"], "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
+    release_caches()  # free the previous call's cached relations
+    return dedup_graph(
+        df, cfg or DedupConfig(), "simhash", id_col, text_col, cache_policy(df)
     )

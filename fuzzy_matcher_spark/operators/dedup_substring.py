@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fuzzy_matcher_spark.config import DedupConfig
-from fuzzy_matcher_spark.operators.connected_components import connected_components
-from fuzzy_matcher_spark.operators.dedup_exact import exact_pairs
+from fuzzy_matcher_spark.operators.dedup_exact import exact_key
 from fuzzy_matcher_spark.operators.pairs import capped_self_join_pairs
+from fuzzy_matcher_spark.plans.graph import cluster
 
 _B = np.uint64(1000003)  # polynomial base; arithmetic mod 2^64
 
@@ -164,16 +164,8 @@ def substring_dedup(
     cfg: DedupConfig | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    include_exact: bool = True,
 ) -> DataFrame:
     cfg = cfg or DedupConfig()
     pairs = substring_candidates(df, cfg, text_col, id_col)
-    verified = substring_verify(pairs, df, cfg, text_col, id_col).select("a", "b")
-    if include_exact:
-        verified = verified.union(exact_pairs(df, text_col, id_col)).distinct()
-    comp = connected_components(verified, max_iter=cfg.cc_max_iter)
-    ids = df.select(F.col(id_col))
-    return ids.join(comp, ids[id_col] == comp["id"], "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-    )
+    verified = substring_verify(pairs, df, cfg, text_col, id_col)
+    return cluster(verified, exact_key(df, text_col), cfg, id_col)

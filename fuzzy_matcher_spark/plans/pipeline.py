@@ -2,9 +2,24 @@
 writes per-partition lineage and metrics to checkpoint tables so runs
 resume mid-pipeline").
 
-Stage graph (minhash mode; simhash swaps stages 2-4):
+Stage graph: an ingest stage, then the shared dedup stage graph
+(plans/graph.py) with this class as its checkpoint policy:
 
     ingest -> signatures -> pairs -> verified -> clusters
+
+Stage layouts (``<run_id>__<stage>`` tables):
+
+- ingest      (id, text) — the input projection, spread over the
+              cores (ensure_parallelism); signatures, the scale decision
+              and the minhash shingle-set rebuild read this checkpoint
+- signatures  minhash (id, _ek, n_units, signature), simhash
+              (id, _ek, fingerprint) — ALL docs, narrow; zero-token docs
+              have n_units = 0 / a NULL fingerprint and skip banding;
+              _ek (exact-dup key) feeds the exact pairs and the roster
+- pairs       minhash (a, b); simhash (a, b, fingerprint_a,
+              fingerprint_b)
+- verified    minhash (a, b, jaccard); simhash (a, b, hamming)
+- clusters    (id, cluster_id) for every ingested id
 
 Each stage materializes its output through TableIO (Iceberg or the
 parquet-manifest fallback) under ``<run_id>__<stage>``, and appends
@@ -22,7 +37,8 @@ Resume = re-invoking run() with the same run_id: stages whose metrics
 row exists and whose output table is readable are skipped; execution
 restarts at the first missing stage. Config changes under the same
 run_id are rejected (config_json mismatch) — a changed config is a new
-run.
+run. The config stamp includes STAGE_LAYOUT, so a run that older code
+left half-finished (different stage tables) is refused the same way.
 """
 
 from __future__ import annotations
@@ -37,21 +53,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fuzzy_matcher_spark.config import DedupConfig
-from fuzzy_matcher_spark.operators.connected_components import connected_components
-from fuzzy_matcher_spark.operators.dedup_exact import exact_pairs
-from fuzzy_matcher_spark.operators.dedup_minhash import (
-    add_signatures,
-    candidate_pairs,
-    verify_pairs,
-)
-from fuzzy_matcher_spark.operators.dedup_simhash import (
-    add_fingerprints,
-    simhash_candidate_pairs,
-    simhash_verify,
-)
-from fuzzy_matcher_spark.functions.minhash import explode_bands
-from fuzzy_matcher_spark.functions.simhash import explode_slices
+from fuzzy_matcher_spark.operators.dedup_minhash import ensure_parallelism
 from fuzzy_matcher_spark.operators.pairs import capped_bucket_stats
+from fuzzy_matcher_spark.plans.graph import band_index, dedup_graph
 from fuzzy_matcher_spark.sources.tableio import TableIO
 
 METRICS_TABLE = "_metrics"
@@ -60,6 +64,9 @@ METRICS_SCHEMA = (
     "run_id string, stage string, rows long, wall_sec double,"
     " completed_at string, config_json string"
 )
+# version of the stage table layouts above, stamped into config_json:
+# 2 = narrow signatures with _ek (1, unstamped: wide add_signatures)
+STAGE_LAYOUT = 2
 
 
 def _count_partition(batches):
@@ -127,6 +134,7 @@ class DedupPipeline:
             {
                 "mode": mode,
                 "sig_format": signature_format_id(self.cfg),
+                "stage_layout": STAGE_LAYOUT,
                 **self.cfg.__dict__,
             },
             sort_keys=True,
@@ -207,14 +215,14 @@ class DedupPipeline:
         )
 
     def _bucket_stats_row(
-        self, run_id: str, index_fn, bucket_keys: list[str]
+        self, run_id: str, index: DataFrame, bucket_keys: list[str]
     ) -> tuple:
         """The skew-cap observability row (bucket histogram + pairs
         dropped by star emission) for the metrics table — the cap is
         never silent."""
         t0 = time.time()
         stats = capped_bucket_stats(
-            index_fn(), bucket_keys, self.cfg.max_band_bucket
+            index, bucket_keys, self.cfg.max_band_bucket
         ).collect()[0]
         return self._metrics_row(
             run_id,
@@ -274,79 +282,23 @@ class DedupPipeline:
 
     # -- the pipeline ---------------------------------------------------------
     def run(self, docs: DataFrame, run_id: str) -> tuple[DataFrame, PipelineReport]:
-        cfg, idc, txt = self.cfg, self.id_col, self.text_col
+        idc, txt = self.id_col, self.text_col
         report = PipelineReport(run_id)
         done = self._completed_stages(run_id)
-        # (band index builder, bucket keys) of the bucket_stats row the
-        # pairs stage commits with its own metrics row; None when a
-        # previous attempt of this run already recorded it
+        # (band index, bucket keys) of the bucket_stats row the pairs
+        # stage commits with its own metrics row; None when a previous
+        # attempt of this run already recorded it
         self._bucket_index = None
 
-        ingest = self._run_stage(
-            run_id, "ingest", done, lambda: docs.select(idc, txt), report
-        )
+        def stage(name: str, build) -> DataFrame:
+            out = self._run_stage(run_id, name, done, build, report)
+            if name == "signatures" and "bucket_stats" not in done:
+                self._bucket_index = band_index(out, self.cfg, self.mode, idc)
+            return out
 
-        if self.mode == "minhash":
-            sig = self._run_stage(
-                run_id,
-                "signatures",
-                done,
-                lambda: add_signatures(ingest, cfg, txt, idc),
-                report,
-            )
-            if "bucket_stats" not in done:
-                self._bucket_index = (
-                    lambda: explode_bands(sig, idc, cfg),
-                    ["band_id", "band_hash"],
-                )
-            pairs = self._run_stage(
-                run_id, "pairs", done, lambda: candidate_pairs(sig, cfg, idc), report
-            )
-            verified = self._run_stage(
-                run_id,
-                "verified",
-                done,
-                lambda: verify_pairs(pairs, sig, cfg, idc, exact=True),
-                report,
-            )
-        else:
-            fp = self._run_stage(
-                run_id,
-                "signatures",
-                done,
-                lambda: add_fingerprints(ingest, cfg, txt, idc),
-                report,
-            )
-            if "bucket_stats" not in done:
-                self._bucket_index = (
-                    lambda: explode_slices(fp, idc, "fingerprint", cfg.simhash_tables),
-                    ["table_id", "slice_key"],
-                )
-            pairs = self._run_stage(
-                run_id,
-                "pairs",
-                done,
-                lambda: simhash_candidate_pairs(fp, cfg, idc),
-                report,
-            )
-            verified = self._run_stage(
-                run_id,
-                "verified",
-                done,
-                lambda: simhash_verify(pairs, fp, cfg, idc),
-                report,
-            )
-
-        def build_clusters() -> DataFrame:
-            edges = verified.select("a", "b").union(
-                exact_pairs(ingest, txt, idc)
-            ).distinct()
-            comp = connected_components(edges, max_iter=cfg.cc_max_iter)
-            ids = ingest.select(F.col(idc))
-            return ids.join(comp, ids[idc] == comp["id"], "left").select(
-                F.col(idc),
-                F.coalesce(F.col("component"), F.col(idc)).alias("cluster_id"),
-            )
-
-        clusters = self._run_stage(run_id, "clusters", done, build_clusters, report)
+        # the ingest checkpoint is read twice (signatures, and the
+        # minhash verify's shingle sets), so it is written already
+        # spread over the cores: neither read re-shuffles the text
+        ingest = stage("ingest", lambda: ensure_parallelism(docs.select(idc, txt)))
+        clusters = dedup_graph(ingest, self.cfg, self.mode, idc, txt, stage)
         return clusters, report

@@ -91,3 +91,36 @@ def test_capped_cross_join_bounded_fanout(spark):
     stats = cross_bucket_stats(a, ["band_hash"], cap=4).collect()
     assert len(stats) == 1
     assert stats[0].bucket_size == 10 and stats[0].n_dropped == 6
+
+
+@pytest.mark.parametrize("at_scale", [True, False])
+def test_cross_dup_pairs_int64_extreme_ids(spark, tmp_path, at_scale):
+    """Ids at the int64 extremes, shared by both corpora, come back
+    exactly on both shapes: the single-pass one (RDD-backed inputs have
+    unknown size, so count as at scale) and the lazy one (small parquet
+    inputs)."""
+    from fuzzy_matcher_spark.operators.dedup_minhash import (
+        _EAGER_STATS_MIN_BYTES,
+        plan_size_bytes,
+    )
+
+    ids = [2**62 + 5, 2**63 - 1, -(2**63)]
+    # three unrelated texts (disjoint vocabularies), one per id
+    texts = [" ".join(f"w{k}x{j}" for j in range(40)) + " doc" for k in range(3)]
+    rows = list(zip(ids, texts))
+    idx = spark.createDataFrame(rows, "doc_id long, text string")
+    pr = spark.createDataFrame(
+        [(i, t.replace("doc", "probe")) for i, t in rows], "doc_id long, text string"
+    )
+    if not at_scale:
+        idx.write.parquet(str(tmp_path / "idx"))
+        pr.write.parquet(str(tmp_path / "pr"))
+        idx = spark.read.parquet(str(tmp_path / "idx"))
+        pr = spark.read.parquet(str(tmp_path / "pr"))
+    size = plan_size_bytes(idx) + plan_size_bytes(pr)
+    assert (size >= _EAGER_STATS_MIN_BYTES) == at_scale
+    got = cross_dup_pairs(idx, pr, CFG).collect()
+    assert sorted((r.index_id, r.probe_id) for r in got) == sorted(
+        (i, i) for i in ids
+    )
+    assert all(r.jaccard >= 0.8 for r in got)

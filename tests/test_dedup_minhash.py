@@ -118,7 +118,7 @@ def test_dup_pair_recall_vs_oracle(spark, pages):
 
     sig = add_signatures(pages, CFG).cache()
     cand = candidate_pairs(sig, CFG)
-    verified = verify_pairs(cand, sig, CFG, exact=True)
+    verified = verify_pairs(cand, sig, CFG)
     got_pairs = {(r.a, r.b) for r in verified.collect()}
     got_pairs |= {(r.a, r.b) for r in exact_pairs(pages, "text", "doc_id").collect()}
 

@@ -260,3 +260,56 @@ def test_pipeline_commit_is_two_jobs(spark, io):
         for s in manifest["snapshots"]
     ]
     assert {"pairs", "bucket_stats"} in snaps
+
+
+def test_pipeline_refuses_old_stage_layout(spark, io):
+    """A run that an older stage layout left half-finished (wide
+    add_signatures checkpoint, no exact-dup key, config stamp without
+    the layout) is refused up front, not failed inside a later stage."""
+    import json
+
+    from fuzzy_matcher_spark.operators.dedup_minhash import add_signatures
+    from fuzzy_matcher_spark.plans.pipeline import PipelineReport
+
+    pages = webpages_df(spark, n_families=5, singletons=5, seed=15)
+    old = DedupPipeline(spark, io, CFG)
+    stamp = json.loads(old._cfg_json)
+    del stamp["stage_layout"]
+    old._cfg_json = json.dumps(stamp, sort_keys=True)
+    done, report = {}, PipelineReport("r12")
+    ingest = old._run_stage(
+        "r12", "ingest", done, lambda: pages.select("doc_id", "text"), report
+    )
+    old._run_stage(
+        "r12", "signatures", done, lambda: add_signatures(ingest, CFG), report
+    )
+    with pytest.raises(ValueError, match="different config"):
+        DedupPipeline(spark, io, CFG).run(pages, run_id="r12")
+
+
+@pytest.mark.parametrize("mode", ["minhash", "simhash"])
+def test_pipeline_matches_in_memory_dedup(spark, io, mode):
+    """The checkpointed and the in-memory run of the dedup graph give
+    the same clusters; a punctuation-only doc stays a singleton and a
+    byte-identical copy co-clusters with its original."""
+    from fuzzy_matcher_spark.operators.dedup_minhash import minhash_dedup
+    from fuzzy_matcher_spark.operators.dedup_simhash import simhash_dedup
+
+    pages = webpages_df(spark, n_families=10, singletons=10, seed=16).select(
+        "doc_id", "text"
+    )
+    top, text = pages.orderBy(F.col("doc_id").desc()).first()
+    docs = pages.unionByName(
+        spark.createDataFrame(
+            [(top + 1, " ... -- !!! ... "), (top + 2, text)], "doc_id long, text string"
+        )
+    )
+    clusters, _ = DedupPipeline(spark, io, CFG, mode=mode).run(docs, run_id=f"r13{mode}")
+    in_memory = {"minhash": minhash_dedup, "simhash": simhash_dedup}[mode]
+    got = {(r.doc_id, r.cluster_id) for r in clusters.collect()}
+    assert got == {(r.doc_id, r.cluster_id) for r in in_memory(docs, CFG).collect()}
+    cl = dict(got)
+    assert len(cl) == docs.count()
+    assert cl[top + 2] == cl[top]
+    assert cl[top + 1] == top + 1
+    assert sum(c == cl[top + 1] for c in cl.values()) == 1
