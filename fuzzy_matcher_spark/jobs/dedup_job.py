@@ -4,7 +4,8 @@ fuzzy_matcher_spark/jobs/dedup_job.py --input ... --workdir ... --run-id ...
 Runs the checkpointed dedup pipeline against an input table of web
 pages (url, warc_ts, html, text, lang) or any (id, text) table, writes
 cluster assignments + canonical-doc election, and prints a one-line
-JSON report. Re-running with the same --run-id resumes mid-pipeline
+JSON report (stage rows and walls, docs/s, and the number of Spark jobs
+the application ran). Re-running with the same --run-id resumes mid-pipeline
 (plans/pipeline.py).
 
 The job never sets the master: on a real cluster it comes from
@@ -91,6 +92,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.output:
         clusters.write.mode("overwrite").parquet(args.output)
+    # every job of this application so far (none is in a job group)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup())
 
     print(
         json.dumps(
@@ -100,6 +103,7 @@ def main(argv: list[str] | None = None) -> int:
                 "docs": n_docs,
                 "wall_sec": round(wall, 3),
                 "docs_per_sec": round(n_docs / wall, 2) if wall else None,
+                "spark_jobs": n_jobs,
                 "stages": [
                     {"stage": s.stage, "rows": s.rows, "sec": s.wall_sec,
                      "skipped": s.skipped}

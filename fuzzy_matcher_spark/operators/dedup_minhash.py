@@ -41,7 +41,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -329,11 +329,19 @@ def band_index(
     return explode_bands(sig_df, id_col, cfg), ["band_id", "band_hash"]
 
 
-def candidate_pairs(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
+def candidate_pairs(
+    sig_df: DataFrame,
+    cfg: DedupConfig,
+    id_col: str = "doc_id",
+    bucket_stats: Observation | None = None,
+) -> DataFrame:
     """Self-join the band index with bucket-size capping. Returns
-    distinct (a, b) with a < b."""
+    distinct (a, b) with a < b; ``bucket_stats`` observes the band
+    histogram (capped_self_join_pairs)."""
     idx, keys = band_index(sig_df, cfg, id_col)
-    return capped_self_join_pairs(idx, keys, id_col, cfg.max_band_bucket)
+    return capped_self_join_pairs(
+        idx, keys, id_col, cfg.max_band_bucket, bucket_stats=bucket_stats
+    )
 
 
 def verify_pairs(

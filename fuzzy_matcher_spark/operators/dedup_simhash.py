@@ -12,7 +12,7 @@ generation is exact for r <= tables - 1; the config validates this.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from fuzzy_matcher_spark.config import DedupConfig
@@ -93,6 +93,7 @@ def simhash_candidate_pairs(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     with_fingerprints: bool = True,
+    bucket_stats: Observation | None = None,
 ) -> DataFrame:
     """Bit-slice bucketed candidate pairs. By default each pair also
     carries both fingerprints (``fingerprint_a`` / ``fingerprint_b``):
@@ -100,7 +101,9 @@ def simhash_candidate_pairs(
     self-join's existing shuffles costs ~8 bytes/row while letting
     simhash_verify run join-free — vs the old shape's TWO candidate-
     sized shuffle joins back to the fingerprint relation. Set
-    ``with_fingerprints=False`` for the bare (a, b) edge list."""
+    ``with_fingerprints=False`` for the bare (a, b) edge list;
+    ``bucket_stats`` observes the slice histogram
+    (capped_self_join_pairs)."""
     if cfg.simhash_hamming_max > cfg.simhash_tables - 1:
         raise ValueError(
             "pigeonhole guarantee requires hamming_max <= tables - 1 "
@@ -113,6 +116,7 @@ def simhash_candidate_pairs(
         id_col,
         cfg.max_band_bucket,
         payload="fingerprint" if with_fingerprints else None,
+        bucket_stats=bucket_stats,
     )
 
 

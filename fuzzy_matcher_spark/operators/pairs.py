@@ -9,11 +9,13 @@ consecutive pairs — linear in bucket size, connectivity-preserving.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from fuzzy_matcher_spark.operators.cachereg import register_cache as _register_cache
 
+# the capped_bucket_stats columns
+BUCKET_STATS = ("n_buckets", "max_bucket", "n_capped", "pairs_dropped_by_cap")
 # above this cap the single-row flattened-combos array (O(cap^2)
 # structs) switches to a two-step explode with O(cap) per-row memory
 _FLAT_COMBOS_MAX_CAP = 256
@@ -25,6 +27,7 @@ def capped_self_join_pairs(
     id_col: str,
     cap: int,
     payload: str | None = None,
+    bucket_stats: Observation | None = None,
 ) -> DataFrame:
     """idx(bucket_keys..., id_col) -> distinct (a, b) with a < b.
 
@@ -57,6 +60,12 @@ def capped_self_join_pairs(
     id array, then explode only each element's suffix slice — which
     bounds per-row materialization to O(cap) instead of O(cap^2) at
     the cost of carrying the id array through one extra explode.
+
+    ``bucket_stats``: an Observation that the first action over the
+    result fills with the ``capped_bucket_stats`` row, taken from the
+    window pass this function already runs — aggregated over the hub
+    rows (one per bucket), no extra job; read it with
+    ``observed_bucket_stats``.
     """
     w = Window.partitionBy(*bucket_keys)
     tagged = idx.select(
@@ -152,8 +161,14 @@ def capped_self_join_pairs(
                 F.col("_a").alias("a"), F.col("_b").alias("b")
             )
 
+    star = tagged
+    if bucket_stats is not None:
+        hub = F.col(id_col) == F.col("_hub")
+        star = star.observe(
+            bucket_stats, *_bucket_stats_aggs(F.when(hub, F.col("_bn")), cap)
+        )
     pairs_big = (
-        tagged.where((F.col("_bn") > cap) & (F.col(id_col) != F.col("_hub")))
+        star.where((F.col("_bn") > cap) & (F.col(id_col) != F.col("_hub")))
         .select(
             F.col("_hub").alias("a"),
             F.col(id_col).alias("b"),
@@ -174,24 +189,19 @@ def capped_self_join_pairs(
     return pairs_small.union(pairs_big).distinct()
 
 
-def capped_bucket_stats(
-    idx: DataFrame, bucket_keys: list[str], cap: int
-) -> DataFrame:
-    """Observability for the capping trade-off: per-bucket-size stats
-    with the number of pairs the star emission drops vs all-pairs
-    (full = n*(n-1)/2, star = n-1). One aggregation over the index —
-    run on demand (pipelines record it into the metrics table), never
-    silently in-path."""
-    sizes = idx.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("n"))
-    n = F.col("n").cast("long")
+def _bucket_stats_aggs(n: Column, cap: int) -> list[Column]:
+    """The capped_bucket_stats aggregates over rows carrying a bucket
+    size ``n``, one non-NULL ``n`` per bucket (rows with a NULL ``n``
+    are not counted)."""
+    n = n.cast("long")
     full = n * (n - 1) / 2
     zero = F.lit(0).cast("long")
     # coalesce: max/sum over ZERO buckets (empty corpus, or every doc
     # filtered out upstream) return NULL, and the metrics recorder
     # int()-casts these — the stats row must stay well-typed
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.coalesce(F.max("n").cast("long"), zero).alias("max_bucket"),
+    return [
+        F.count(n).alias("n_buckets"),
+        F.coalesce(F.max(n), zero).alias("max_bucket"),
         F.coalesce(
             F.sum(F.when(n > cap, 1).otherwise(0)).cast("long"), zero
         ).alias("n_capped"),
@@ -199,7 +209,31 @@ def capped_bucket_stats(
             F.sum(F.when(n > cap, full - (n - 1)).otherwise(0)).cast("long"),
             zero,
         ).alias("pairs_dropped_by_cap"),
-    )
+    ]
+
+
+def observed_bucket_stats(observed: Observation) -> dict[str, int]:
+    """The capped_bucket_stats row a ``capped_self_join_pairs(...,
+    bucket_stats=observed)`` pass filled in. When AQE proves the index
+    empty it can prune the observed scan; the Observation then completes
+    with an empty row, which ``Observation.get`` cannot convert — that
+    index has no buckets, so every stat is zero."""
+    # the JVM row, checked before .get converts it
+    if observed._jo.getRow().length() == 0:
+        return dict.fromkeys(BUCKET_STATS, 0)
+    return {k: int(v) for k, v in observed.get.items()}
+
+
+def capped_bucket_stats(
+    idx: DataFrame, bucket_keys: list[str], cap: int
+) -> DataFrame:
+    """Observability for the capping trade-off: per-bucket-size stats
+    with the number of pairs the star emission drops vs all-pairs
+    (full = n*(n-1)/2, star = n-1). One aggregation over the index, on
+    demand; the checkpointed pipeline observes the same row during its
+    pairs pass instead (capped_self_join_pairs(bucket_stats=…))."""
+    sizes = idx.groupBy(*bucket_keys).agg(F.count(F.lit(1)).alias("n"))
+    return sizes.agg(*_bucket_stats_aggs(F.col("n"), cap))
 
 
 def salted_join(

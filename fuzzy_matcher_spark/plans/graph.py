@@ -18,7 +18,7 @@ Stage layouts (``mode`` picks the signature and verify kernels):
   punctuation-only docs do not cluster through a shared sentinel.
   ``_ek`` is the exact-dup key: the exact star pairs and the final id
   roster both read it here, so nothing re-scans the text for them.
-- pairs — the capped self-join over ``band_index`` (MinHash bands or
+- pairs — the capped self-join over the band index (MinHash bands or
   SimHash bit slices); simhash pairs carry both fingerprints.
 - verified — exact Jaccard over shingle sets recomputed from the docs
   (minhash) or the Hamming filter (simhash).
@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from fuzzy_matcher_spark.config import DedupConfig
@@ -46,7 +46,6 @@ from fuzzy_matcher_spark.operators.dedup_minhash import (
     _EAGER_STATS_MIN_BYTES,
     _shingle_sets,
     _signatures_with_exact_key,
-    band_index as minhash_band_index,
     candidate_pairs,
     plan_size_bytes,
     verify_pairs,
@@ -55,7 +54,6 @@ from fuzzy_matcher_spark.operators.dedup_simhash import (
     fingerprints_with_exact_key,
     simhash_candidate_pairs,
     simhash_verify,
-    slice_index,
 )
 
 Stage = Callable[[str, Callable[[], DataFrame]], DataFrame]
@@ -74,15 +72,6 @@ def _banded(sig: DataFrame, mode: str) -> DataFrame:
     if mode == "minhash":
         return sig.where(F.col("n_units") > 0)
     return sig.where(F.col("fingerprint").isNotNull())
-
-
-def band_index(
-    sig: DataFrame, cfg: DedupConfig, mode: str, id_col: str
-) -> tuple[DataFrame, list[str]]:
-    """(index_df, bucket_keys) of a signatures stage: what the pairs
-    stage self-joins and the pipeline's bucket_stats row histograms."""
-    index = minhash_band_index if mode == "minhash" else slice_index
-    return index(_banded(sig, mode), cfg, id_col)
 
 
 def cluster(
@@ -128,9 +117,12 @@ def dedup_graph(
     id_col: str,
     text_col: str,
     stage: Stage,
+    bucket_stats: Observation | None = None,
 ) -> DataFrame:
     """docs (id, text) -> (id, cluster_id), each stage built through
-    ``stage``. ``mode`` is "minhash" or "simhash"."""
+    ``stage``. ``mode`` is "minhash" or "simhash". ``bucket_stats``
+    observes the pairs stage's bucket histogram
+    (capped_self_join_pairs)."""
     if mode == "minhash":
         cfg.validate()
         signatures, pairs_of = _signatures_with_exact_key, candidate_pairs
@@ -163,6 +155,9 @@ def dedup_graph(
         raise ValueError(f"unknown dedup mode: {mode!r}")
 
     sig = stage("signatures", lambda: signatures(docs, cfg, text_col, id_col))
-    pairs = stage("pairs", lambda: pairs_of(_banded(sig, mode), cfg, id_col))
+    pairs = stage(
+        "pairs",
+        lambda: pairs_of(_banded(sig, mode), cfg, id_col, bucket_stats=bucket_stats),
+    )
     verified = stage("verified", lambda: verify(pairs, sig))
     return stage("clusters", lambda: cluster(verified, sig, cfg, id_col))

@@ -22,23 +22,31 @@ Stage layouts (``<run_id>__<stage>`` tables):
 - clusters    (id, cluster_id) for every ingested id
 
 Each stage materializes its output through TableIO (Iceberg or the
-parquet-manifest fallback) under ``<run_id>__<stage>``, and appends
+parquet-manifest fallback) under ``<run_id>__<stage>``, then commits
+from the driver: the bookkeeping rows are built there and appended with
+``TableIO.append_rows`` (on the parquet backend a commit launches no
+Spark job):
 
-- per-partition rows to ``_lineage`` (run_id, stage, attempt,
-  partition_id, rows) — partition-level row accounting for debugging
-  skew and for verifying resumed runs read exactly what the original
-  wrote;
+- per-file rows to ``_lineage`` (run_id, stage, attempt, partition_id,
+  rows), taken from the written files' metadata (``TableIO.part_rows``:
+  parquet footers, Iceberg's files table); partition_id is the writer
+  task's partition — partition-level row accounting for debugging skew
+  and for verifying resumed runs read exactly what the original wrote;
 - then a row to ``_metrics`` (run_id, stage, rows, wall_sec,
-  completed_at, config_json), which marks the stage done. The pairs
-  stage commits the ``bucket_stats`` skew-cap row (rows = pairs dropped
-  by the bucket cap) in the same append.
+  completed_at, config_json), which marks the stage done; rows is the
+  sum of the lineage rows. The pairs stage commits the
+  ``bucket_stats`` skew-cap row (rows = pairs dropped by the bucket
+  cap) in the same append, observed during its own pass
+  (capped_self_join_pairs).
 
-Resume = re-invoking run() with the same run_id: stages whose metrics
-row exists and whose output table is readable are skipped; execution
-restarts at the first missing stage. Config changes under the same
-run_id are rejected (config_json mismatch) — a changed config is a new
-run. The config stamp includes STAGE_LAYOUT, so a run that older code
-left half-finished (different stage tables) is refused the same way.
+Resume = re-invoking run() with the same run_id: a stage whose metrics
+row exists is skipped when its checkpoint's footers open and their rows
+sum to the recorded total; a truncated or missing part rebuilds it.
+Execution restarts at the first missing stage. Config changes under
+the same run_id are rejected (config_json mismatch) — a changed config
+is a new run. The config stamp includes STAGE_LAYOUT, so a run that
+older code left half-finished (different stage tables) is refused the
+same way.
 """
 
 from __future__ import annotations
@@ -50,12 +58,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from fuzzy_matcher_spark.config import DedupConfig
 from fuzzy_matcher_spark.operators.dedup_minhash import ensure_parallelism
-from fuzzy_matcher_spark.operators.pairs import capped_bucket_stats
-from fuzzy_matcher_spark.plans.graph import band_index, dedup_graph
+from fuzzy_matcher_spark.operators.pairs import observed_bucket_stats
+from fuzzy_matcher_spark.plans.graph import dedup_graph
 from fuzzy_matcher_spark.sources.tableio import TableIO
 
 METRICS_TABLE = "_metrics"
@@ -64,28 +71,12 @@ METRICS_SCHEMA = (
     "run_id string, stage string, rows long, wall_sec double,"
     " completed_at string, config_json string"
 )
+LINEAGE_SCHEMA = (
+    "run_id string, stage string, attempt string, partition_id int, rows long"
+)
 # version of the stage table layouts above, stamped into config_json:
 # 2 = narrow signatures with _ek (1, unstamped: wide add_signatures)
 STAGE_LAYOUT = 2
-
-
-def _count_partition(batches):
-    """mapInArrow body: one (partition_id, rows) row per non-empty
-    partition of a relation projected to its spark_partition_id() —
-    per-partition counts without the shuffle (and, under AQE, the extra
-    job) of a groupBy."""
-    import pyarrow as pa
-
-    pid, rows = None, 0
-    for b in batches:
-        if b.num_rows:
-            pid = b.column(0)[0].as_py()
-            rows += b.num_rows
-    if rows:
-        yield pa.RecordBatch.from_pydict(
-            {"partition_id": [pid], "rows": [rows]},
-            schema=pa.schema([("partition_id", pa.int32()), ("rows", pa.int64())]),
-        )
 
 
 @dataclass
@@ -139,66 +130,49 @@ class DedupPipeline:
             },
             sort_keys=True,
         )
+        # the pairs stage's observed bucket histogram (run() sets it)
+        self._bucket_stats: Observation | None = None
 
     # -- checkpoint bookkeeping ---------------------------------------------
-    def _completed_stages(self, run_id: str) -> dict[str, str]:
+    def _completed_stages(self, run_id: str) -> dict[str, tuple[str, int]]:
+        """stage -> (config_json, rows) of the latest commit of each
+        stage of ``run_id``."""
         if not self.io.exists(METRICS_TABLE):
             return {}
         rows = (
             self.io.read(METRICS_TABLE)
             .where(F.col("run_id") == run_id)
-            .select("stage", "config_json")
+            .select("stage", "config_json", "rows", "completed_at")
             .collect()
         )
-        return {r.stage: r.config_json for r in rows}
+        return {
+            r.stage: (r.config_json, r.rows)
+            for r in sorted(rows, key=lambda r: r.completed_at)
+        }
 
-    def _record(self, run_id: str, stage: str, df: DataFrame, wall: float) -> int:
-        """Commit a finished stage: its per-partition ``_lineage`` rows,
-        then its ``_metrics`` row (the pairs stage adds the
-        ``bucket_stats`` row to the same append). Two Spark jobs: the
-        lineage append, which counts the rows of every partition of the
-        read-back checkpoint as it writes them and hands the total to
-        the driver, and the metrics append."""
+    def _record(self, run_id: str, stage: str, wall: float) -> int:
+        """Commit a finished stage (no Spark job on the parquet backend):
+        its per-file
+        ``_lineage`` rows, read from the checkpoint's file metadata
+        (writer-task partition_id, rows), then its ``_metrics`` row —
+        rows = the lineage sum, what the checkpoint holds rather than
+        what the plan promised. The pairs stage adds the observed
+        ``bucket_stats`` row to the same append. Returns the rows."""
         # attempt id distinguishes a rebuild (e.g. after checkpoint
         # corruption) from the original write — counting without it
         # double-counts stale lineage rows from the failed attempt
         attempt = uuid.uuid4().hex
-        lineage = (
-            df.select(F.spark_partition_id().alias("partition_id"))
-            .mapInArrow(_count_partition, "partition_id int, rows long")
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.lit(attempt).alias("attempt"),
-                "partition_id",
-                "rows",
-            )
+        parts = self.io.part_rows(self._table(run_id, stage))
+        self.io.append_rows(
+            LINEAGE_TABLE,
+            [(run_id, stage, attempt, pid, n) for pid, n in parts],
+            LINEAGE_SCHEMA,
         )
-        # the row count is the sum of the lineage rows as written — the
-        # metrics reflect what the checkpoint holds, not what the plan
-        # promised — observed during the append instead of read back
-        total = Observation(f"lineage-{attempt}")
-        lineage = lineage.observe(
-            total, F.coalesce(F.sum("rows"), F.lit(0).cast("long")).alias("rows")
-        )
-        self.io.write(lineage, LINEAGE_TABLE, mode="append")
-        n = int(total.get["rows"])
+        n = sum(n for _, n in parts)
         rows = [self._metrics_row(run_id, stage, n, wall, self._cfg_json)]
-        if stage == "pairs" and self._bucket_index is not None:
-            rows.append(self._bucket_stats_row(run_id, *self._bucket_index))
-        # built from literals in the JVM: createDataFrame(list) would go
-        # through a Python RDD, i.e. Python workers, for a few rows
-        fields = T.StructType.fromDDL(METRICS_SCHEMA).fields
-        structs = [
-            F.struct(
-                *(F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, fields))
-            )
-            for r in rows
-        ]
-        metrics = self.spark.range(1, numPartitions=1).select(
-            F.inline(F.array(*structs))
-        )
-        self.io.write(metrics, METRICS_TABLE, mode="append")
+        if stage == "pairs" and self._bucket_stats is not None:
+            rows.append(self._bucket_stats_row(run_id, self._bucket_stats))
+        self.io.append_rows(METRICS_TABLE, rows, METRICS_SCHEMA)
         return n
 
     @staticmethod
@@ -214,29 +188,17 @@ class DedupPipeline:
             config_json,
         )
 
-    def _bucket_stats_row(
-        self, run_id: str, index: DataFrame, bucket_keys: list[str]
-    ) -> tuple:
+    def _bucket_stats_row(self, run_id: str, observed: Observation) -> tuple:
         """The skew-cap observability row (bucket histogram + pairs
         dropped by star emission) for the metrics table — the cap is
-        never silent."""
-        t0 = time.time()
-        stats = capped_bucket_stats(
-            index, bucket_keys, self.cfg.max_band_bucket
-        ).collect()[0]
+        never silent. ``observed`` was filled by the pairs write."""
+        stats = observed_bucket_stats(observed)
         return self._metrics_row(
             run_id,
             "bucket_stats",
-            int(stats.pairs_dropped_by_cap),
-            time.time() - t0,
-            json.dumps(
-                {
-                    "n_buckets": int(stats.n_buckets),
-                    "max_bucket": int(stats.max_bucket),
-                    "n_capped": int(stats.n_capped),
-                    "cap": self.cfg.max_band_bucket,
-                }
-            ),
+            stats.pop("pairs_dropped_by_cap"),
+            0.0,
+            json.dumps({**stats, "cap": self.cfg.max_band_bucket}),
         )
 
     def _table(self, run_id: str, stage: str) -> str:
@@ -246,37 +208,38 @@ class DedupPipeline:
         self,
         run_id: str,
         stage: str,
-        done: dict[str, str],
+        done: dict[str, tuple[str, int]],
         build: "callable",
         report: PipelineReport,
     ) -> DataFrame:
         tname = self._table(run_id, stage)
         if stage in done:
-            if done[stage] != self._cfg_json:
+            config_json, rows = done[stage]
+            if config_json != self._cfg_json:
                 raise ValueError(
                     f"run {run_id} stage {stage} was built with a different "
                     "config; use a new run_id"
                 )
-            # validate the checkpoint is actually readable — a killed
-            # writer can leave a committed-looking but truncated table.
-            # read() infers the schema from ONE part's footer (whichever
-            # the listing yields first); count() then opens every
-            # part's footer in its scan tasks (metadata-only, no row
-            # scan). A truncated part fails one or the other: fall
-            # through and rebuild instead of failing mid-resume.
+            # validate the checkpoint from its files, not from a Spark
+            # count (which a cached plan of the same read can answer
+            # without opening them): every live part's footer must open
+            # — a killed writer can leave a committed-looking but
+            # truncated table — and the rows must add up to the
+            # recorded total, or a lost part goes unnoticed. Otherwise
+            # fall through and rebuild instead of failing mid-resume.
             try:
-                out = self.io.read(tname)
-                n = out.count()
-                report.stages.append(StageResult(stage, n, 0.0, skipped=True))
-                return out
-            except Exception:
-                pass  # rebuild below
+                ok = sum(n for _, n in self.io.part_rows(tname)) == rows
+            except (OSError, ValueError):  # unreadable footer / manifest
+                ok = False
+            if ok:
+                report.stages.append(StageResult(stage, rows, 0.0, skipped=True))
+                return self.io.read(tname)
         t0 = time.perf_counter()
         df = build()
         self.io.write(df, tname, mode="overwrite")
         out = self.io.read(tname)
         wall = time.perf_counter() - t0
-        n = self._record(run_id, stage, out, wall)
+        n = self._record(run_id, stage, wall)
         report.stages.append(StageResult(stage, n, round(wall, 3), skipped=False))
         return out
 
@@ -285,20 +248,19 @@ class DedupPipeline:
         idc, txt = self.id_col, self.text_col
         report = PipelineReport(run_id)
         done = self._completed_stages(run_id)
-        # (band index, bucket keys) of the bucket_stats row the pairs
-        # stage commits with its own metrics row; None when a previous
-        # attempt of this run already recorded it
-        self._bucket_index = None
+        # filled by the pairs stage's own pass and committed with its
+        # metrics row; None when a previous attempt of this run already
+        # recorded the bucket_stats row
+        self._bucket_stats = None if "bucket_stats" in done else Observation()
 
         def stage(name: str, build) -> DataFrame:
-            out = self._run_stage(run_id, name, done, build, report)
-            if name == "signatures" and "bucket_stats" not in done:
-                self._bucket_index = band_index(out, self.cfg, self.mode, idc)
-            return out
+            return self._run_stage(run_id, name, done, build, report)
 
         # the ingest checkpoint is read twice (signatures, and the
         # minhash verify's shingle sets), so it is written already
         # spread over the cores: neither read re-shuffles the text
         ingest = stage("ingest", lambda: ensure_parallelism(docs.select(idc, txt)))
-        clusters = dedup_graph(ingest, self.cfg, self.mode, idc, txt, stage)
+        clusters = dedup_graph(
+            ingest, self.cfg, self.mode, idc, txt, stage, self._bucket_stats
+        )
         return clusters, report

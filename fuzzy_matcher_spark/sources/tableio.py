@@ -16,19 +16,65 @@ snapshot list) over two backends:
   manifest-swap (single JSON rename), good enough for single-writer
   pipelines; a real deployment uses the Iceberg backend.
 
+  Schema stamp: each snapshot entry records the schema it was written
+  with (``df.schema``, made nullable as Spark's parquet writer stores
+  it). When every live snapshot carries the same stamp, ``read`` hands
+  it to ``spark.read.schema`` and skips the footer-inference job that
+  a plain ``spark.read.parquet`` runs; manifests without a stamp, and
+  appends whose stamps differ, fall back to inference.
+
+Two calls serve checkpoint bookkeeping from metadata and driver-side
+rows (on ParquetTableIO neither launches a Spark job):
+
+- ``part_rows(table)``: (writer partition id, rows) of every non-empty
+  live data file — parquet footers read with pyarrow on the driver,
+  or Iceberg's ``files`` metadata table. A truncated part file fails
+  the footer read.
+- ``append_rows(table, rows, ddl)``: append a few driver-side rows —
+  one pyarrow-written parquet file per snapshot, or a JVM-literal
+  DataFrame appended to the Iceberg table.
+
 Pipeline code (plans/pipeline.py) only sees this interface, so the
 execution plan is identical under both backends.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+# the writer task's partition id in a data file name: Spark's
+# ``part-00003-<uuid>-c000.snappy.parquet``, Iceberg's ``00003-<task>-<uuid>-…``
+_PART_ID = re.compile(r"(?:part-)?(\d+)")
+
+
+def _part_id(path: str) -> int:
+    return int(_PART_ID.match(os.path.basename(path)).group(1))
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable — the schema
+    Spark's parquet writer stores, and so the one inference reads back."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class TableIO:
@@ -43,6 +89,15 @@ class TableIO:
     def delete_where(self, table: str, predicate: str) -> None: ...
     def exists(self, table: str) -> bool: ...
     def snapshots(self, table: str) -> list[dict]: ...
+    def part_rows(self, table: str) -> list[tuple[int, int]]:
+        """(writer partition id, rows) per non-empty live data file,
+        from file metadata rather than a scan of the data."""
+        ...
+
+    def append_rows(self, table: str, rows: list[tuple], ddl: str) -> None:
+        """Append driver-side ``rows`` (tuples in ``ddl`` column order)
+        with no Python-worker hop; no-op for an empty list."""
+        ...
 
     def delete_matching(self, table: str, keys: DataFrame, key_col: str) -> None:
         """Row-level delete driven by a DataFrame of keys — the bulk
@@ -93,12 +148,55 @@ class ParquetTableIO(TableIO):
     def snapshots(self, table: str) -> list[dict]:
         return self._load_manifest(table)["snapshots"]
 
-    def read(self, table: str) -> DataFrame:
+    def _live(self, table: str) -> list[dict]:
         snaps = self._load_manifest(table)["snapshots"]
         if not snaps:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        live = [s["path"] for s in snaps if s["live"]]
-        return self.spark.read.parquet(*live)
+        return [s for s in snaps if s["live"]]
+
+    def read(self, table: str) -> DataFrame:
+        live = self._live(table)
+        stamps = [s.get("schema") for s in live]
+        reader = self.spark.read
+        if stamps[0] and all(st == stamps[0] for st in stamps):
+            reader = reader.schema(T.StructType.fromJson(stamps[0]))
+        return reader.parquet(*[s["path"] for s in live])
+
+    def part_rows(self, table: str) -> list[tuple[int, int]]:
+        out = []
+        for snap in self._live(table):
+            pattern = os.path.join(snap["path"], "**", "part-*")
+            for f in sorted(glob.glob(pattern, recursive=True)):
+                n = pq.ParquetFile(f).metadata.num_rows
+                if n:
+                    out.append((_part_id(f), n))
+        return out
+
+    def _new_snapshot(self, table: str) -> tuple[dict, str]:
+        """(manifest, path of the snapshot to write next)."""
+        m = self._load_manifest(table)
+        return m, os.path.join(self._dir(table), f"snap-{len(m['snapshots']):05d}")
+
+    def _add_snapshot(
+        self, table: str, m: dict, path: str, mode: str, schema: T.StructType | None
+    ) -> None:
+        """Commit the written ``path`` as the next snapshot, stamped
+        with ``schema`` (None: read by inference)."""
+        snap_id = len(m["snapshots"])
+        if mode == "overwrite":
+            for s in m["snapshots"]:
+                s["live"] = False
+        m["snapshots"].append(
+            {
+                "id": snap_id,
+                "path": path,
+                "live": True,
+                "ts": time.time(),
+                "op": mode,
+                "schema": schema and _nullable(schema).jsonValue(),
+            }
+        )
+        self._commit(table, m)
 
     def write(
         self,
@@ -108,22 +206,30 @@ class ParquetTableIO(TableIO):
         partition_by: list[str] | None = None,
     ) -> None:
         assert mode in ("overwrite", "append")
-        m = self._load_manifest(table)
-        snap_id = len(m["snapshots"])
-        path = os.path.join(self._dir(table), f"snap-{snap_id:05d}")
+        m, path = self._new_snapshot(table)
         writer = df.write.mode("overwrite")
         if partition_by:
             # hive-style partition dirs -> partition pruning on read
-            # (Iceberg backend uses hidden partitioning instead)
+            # (Iceberg backend uses hidden partitioning instead); the
+            # partition columns move to the end of the read schema, so
+            # such snapshots carry no stamp and read by inference
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        if mode == "overwrite":
-            for s in m["snapshots"]:
-                s["live"] = False
-        m["snapshots"].append(
-            {"id": snap_id, "path": path, "live": True, "ts": time.time(), "op": mode}
+        self._add_snapshot(table, m, path, mode, None if partition_by else df.schema)
+
+    def append_rows(self, table: str, rows: list[tuple], ddl: str) -> None:
+        if not rows:
+            return
+        schema = T.StructType.fromDDL(ddl)
+        m, path = self._new_snapshot(table)
+        os.makedirs(path)
+        pq.write_table(
+            pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)
+            ),
+            os.path.join(path, "part-00000.parquet"),
         )
-        self._commit(table, m)
+        self._add_snapshot(table, m, path, "append", schema)
 
     def delete_where(self, table: str, predicate: str) -> None:
         """Copy-on-write row-level delete: rewrite survivors into a new
@@ -204,6 +310,30 @@ class IcebergTableIO(TableIO):
             )
         finally:
             self.spark.catalog.dropTempView(view)
+
+    def part_rows(self, table: str) -> list[tuple[int, int]]:
+        # the files metadata table: the current snapshot's data files
+        # with the record counts committed for them (reads manifests,
+        # not data files)
+        files = self.spark.sql(
+            f"SELECT file_path, record_count FROM {self._fq(table)}.files"
+        ).collect()
+        return [(_part_id(r.file_path), r.record_count) for r in files if r.record_count]
+
+    def append_rows(self, table: str, rows: list[tuple], ddl: str) -> None:
+        if not rows:
+            return
+        # built from literals in the JVM: createDataFrame(list) would go
+        # through a Python RDD, i.e. Python workers, for a few rows
+        fields = T.StructType.fromDDL(ddl).fields
+        structs = [
+            F.struct(
+                *(F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, fields))
+            )
+            for r in rows
+        ]
+        df = self.spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
+        self.write(df, table, mode="append")
 
     def snapshots(self, table: str) -> list[dict]:
         rows = self.spark.sql(

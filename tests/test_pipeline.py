@@ -217,11 +217,12 @@ def test_pipeline_rebuilds_corrupt_last_part(spark, io):
     assert clusters.count() == pages.count()
 
 
-def test_pipeline_commit_is_two_jobs(spark, io):
-    """Each checkpoint commit costs two Spark jobs (lineage append,
-    metrics append); the pairs commit carries the bucket_stats row in
-    the same _metrics snapshot, and every stage's lineage rows sum to
-    its recorded total."""
+def test_pipeline_commit_runs_no_spark_job(spark, io):
+    """A checkpoint commit launches no Spark job: lineage rows come from
+    the written files' footers and both bookkeeping appends are written
+    on the driver. The pairs commit carries the bucket_stats row,
+    observed during the pairs pass, in the same _metrics snapshot, and
+    every stage's lineage rows sum to its recorded total."""
     import json
     import os
 
@@ -231,20 +232,19 @@ def test_pipeline_commit_is_two_jobs(spark, io):
     jobs = {}
     orig = pipe._record
 
-    def counted(run_id, stage, df, wall):
+    def counted(run_id, stage, *args):
         group = f"commit-{stage}"
         sc.setJobGroup(group, group)
         try:
-            return orig(run_id, stage, df, wall)
+            return orig(run_id, stage, *args)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs[stage] = len(sc.statusTracker().getJobIdsForGroup(group))
 
     pipe._record = counted
     _, rep = pipe.run(pages, run_id="r11")
-    # the pairs commit also runs the bucket_stats aggregation
-    assert {s: n for s, n in jobs.items() if s != "pairs"} == {
-        "ingest": 2, "signatures": 2, "verified": 2, "clusters": 2,
+    assert jobs == {
+        "ingest": 0, "signatures": 0, "pairs": 0, "verified": 0, "clusters": 0,
     }
 
     totals = {s.stage: s.rows for s in rep.stages}
@@ -313,3 +313,218 @@ def test_pipeline_matches_in_memory_dedup(spark, io, mode):
     assert cl[top + 2] == cl[top]
     assert cl[top + 1] == top + 1
     assert sum(c == cl[top + 1] for c in cl.values()) == 1
+
+
+def test_pipeline_rebuilds_short_checkpoint(spark, io):
+    """A resume whose checkpoint lost a whole part file (every footer
+    left still opens) sees the footer rows fall short of the recorded
+    total and rebuilds the stage instead of skipping it."""
+    import glob
+    import json
+    import os
+
+    pages = webpages_df(spark, n_families=8, singletons=8, seed=18)
+    pipe = DedupPipeline(spark, io, CFG)
+
+    class Boom(Exception):
+        pass
+
+    orig = pipe._run_stage
+
+    def killed_at_pairs(run_id, stage, done, build, report):
+        if stage == "pairs":
+            raise Boom()
+        return orig(run_id, stage, done, build, report)
+
+    pipe._run_stage = killed_at_pairs
+    with pytest.raises(Boom):
+        pipe.run(pages, run_id="r14")
+    pipe._run_stage = orig
+
+    sig_rows = (
+        io.read(METRICS_TABLE).where("run_id = 'r14' and stage = 'signatures'")
+        .first().rows
+    )
+    manifest = json.load(
+        open(os.path.join(io.root, "r14__signatures/_manifest.json"))
+    )
+    live = [s["path"] for s in manifest["snapshots"] if s["live"]][0]
+    parts = sorted(glob.glob(os.path.join(live, "part-*.parquet")))
+    assert len(parts) > 1
+    os.remove(parts[0])
+
+    clusters, rep = pipe.run(pages, run_id="r14")
+    by_stage = {s.stage: s for s in rep.stages}
+    assert by_stage["ingest"].skipped
+    assert not by_stage["signatures"].skipped, "short checkpoint must rebuild"
+    assert by_stage["signatures"].rows == sig_rows == pages.count()
+    assert {r.doc_id for r in clusters.collect()} == {
+        r.doc_id for r in pages.select("doc_id").collect()
+    }
+
+
+CAP_CFG = DedupConfig(
+    shingle_mode="word", shingle_size=4, jaccard_threshold=0.8, max_band_bucket=4
+)
+STAGES = ["ingest", "signatures", "pairs", "verified", "clusters"]
+
+
+@pytest.fixture(scope="module")
+def capped_runs(spark, tmp_path_factory):
+    """Finished pipeline runs in both modes over two corpora: webpages
+    plus a 10-page template family, larger than the bucket cap
+    (``capped-<mode>``), and punctuation-only docs, whose band index is
+    empty (``punct-<mode>``)."""
+    io = ParquetTableIO(spark, str(tmp_path_factory.mktemp("capped")))
+    pages = webpages_df(spark, n_families=4, singletons=6, seed=17).select(
+        "doc_id", "text"
+    )
+    top = pages.agg(F.max("doc_id")).first()[0]
+    template = " ".join(f"boilerplate{i}" for i in range(40))
+    family = [(top + 1 + i, f"{template} slot{i}") for i in range(10)]
+    corpora = {
+        "capped": pages.unionByName(
+            spark.createDataFrame(family, "doc_id long, text string")
+        ),
+        "punct": spark.createDataFrame(
+            [(i, " ... -- !!! ") for i in range(6)], "doc_id long, text string"
+        ),
+    }
+    for mode in ("minhash", "simhash"):
+        for name, docs in corpora.items():
+            DedupPipeline(spark, io, CAP_CFG, mode=mode).run(
+                docs, run_id=f"{name}-{mode}"
+            )
+    return io
+
+
+@pytest.mark.parametrize("corpus", ["capped", "punct"])
+@pytest.mark.parametrize("mode", ["minhash", "simhash"])
+def test_pipeline_bucket_stats_observed(spark, capped_runs, mode, corpus):
+    """The bucket_stats row the pairs pass observes equals the on-demand
+    capped_bucket_stats over the band index of the signatures
+    checkpoint — with the cap firing, and over an empty index."""
+    import json
+
+    from fuzzy_matcher_spark.operators.dedup_minhash import band_index
+    from fuzzy_matcher_spark.operators.dedup_simhash import slice_index
+    from fuzzy_matcher_spark.operators.pairs import capped_bucket_stats
+
+    io, run = capped_runs, f"{corpus}-{mode}"
+    rows = (
+        io.read(METRICS_TABLE)
+        .where(f"run_id = '{run}' and stage = 'bucket_stats'")
+        .collect()
+    )
+    assert len(rows) == 1
+    got = {**json.loads(rows[0].config_json), "pairs_dropped_by_cap": rows[0].rows}
+
+    sig = io.read(f"{run}__signatures")
+    if mode == "minhash":
+        idx, keys = band_index(sig.where("n_units > 0"), CAP_CFG)
+    else:
+        idx, keys = slice_index(sig.where("fingerprint IS NOT NULL"), CAP_CFG)
+    want = capped_bucket_stats(idx, keys, CAP_CFG.max_band_bucket).first().asDict()
+    assert got == {**want, "cap": CAP_CFG.max_band_bucket}
+    if corpus == "capped":
+        assert want["n_capped"] > 0 and want["pairs_dropped_by_cap"] > 0
+    else:
+        assert want["n_buckets"] == 0
+
+
+def test_observed_bucket_stats_of_pruned_scan(spark, tmp_path):
+    """An index AQE proves empty can drop the observed scan from the
+    plan; the Observation then holds an empty row, read as all-zero
+    stats rather than raising or waiting."""
+    from pyspark.sql import Observation
+
+    from fuzzy_matcher_spark.operators.pairs import (
+        BUCKET_STATS,
+        capped_self_join_pairs,
+        observed_bucket_stats,
+    )
+
+    idx = spark.range(10).select(
+        F.lit(1).alias("band_id"),
+        F.col("id").alias("band_hash"),
+        F.col("id").alias("doc_id"),
+    ).where("doc_id < 0")
+    observed = Observation()
+    pairs = capped_self_join_pairs(
+        idx, ["band_id", "band_hash"], "doc_id", 4, bucket_stats=observed
+    )
+    pairs.write.parquet(str(tmp_path / "pairs"))
+    assert observed_bucket_stats(observed) == dict.fromkeys(BUCKET_STATS, 0)
+
+
+def test_tableio_schema_stamp_matches_inference(spark, capped_runs, tmp_path):
+    """Every stamped read — each pipeline stage layout, the bookkeeping
+    tables and the streaming signature/pair tables — has exactly the
+    schema inference gives."""
+    from fuzzy_matcher_spark.streaming.ingest import (
+        PAIR_TABLE,
+        SIG_TABLE,
+        incremental_dedup_sink,
+    )
+
+    stream_io = ParquetTableIO(spark, str(tmp_path / "stream"))
+    pages = webpages_df(spark, n_families=4, singletons=4, seed=19).select(
+        "doc_id", "text"
+    )
+    sink = incremental_dedup_sink(stream_io, CFG)
+    sink(pages.where("doc_id % 2 = 0"), 0)
+    sink(pages.where("doc_id % 2 = 1"), 1)
+
+    tables = [
+        (capped_runs, f"{corpus}-{mode}__{stage}")
+        for corpus in ("capped", "punct")
+        for mode in ("minhash", "simhash")
+        for stage in STAGES
+    ]
+    tables += [(capped_runs, METRICS_TABLE), (capped_runs, "_lineage")]
+    tables += [(stream_io, SIG_TABLE), (stream_io, PAIR_TABLE)]
+    for tio, t in tables:
+        live = [s for s in tio.snapshots(t) if s["live"]]
+        assert all(s["schema"] for s in live), t
+        inferred = spark.read.parquet(*[s["path"] for s in live]).schema
+        assert tio.read(t).schema == inferred, t
+
+
+def test_tableio_unstamped_mixed_and_driver_appends(spark, io):
+    """A manifest without schema stamps still reads; snapshots with
+    different stamps read by inference; append_rows snapshots read
+    through Spark and as plain parquet directories."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from fuzzy_matcher_spark.plans.pipeline import METRICS_SCHEMA
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    io.write(df, "old")
+    path = os.path.join(io.root, "old", "_manifest.json")
+    manifest = json.load(open(path))
+    for s in manifest["snapshots"]:
+        del s["schema"]
+    json.dump(manifest, open(path, "w"))
+    assert sorted(map(tuple, io.read("old").collect())) == [(1, "a"), (2, "b")]
+
+    io.write(df, "mixed")
+    wide = spark.createDataFrame([(3, "c", 1.5)], "id long, v string, w double")
+    io.write(wide, "mixed", mode="append")
+    live = [s["path"] for s in io.snapshots("mixed") if s["live"]]
+    assert io.read("mixed").schema == spark.read.parquet(*live).schema
+    assert io.read("mixed").count() == 3
+
+    rows = [("r", "s", 3, 1.5, "2026-01-01T00:00:00Z", "{}")]
+    io.append_rows("m", rows, METRICS_SCHEMA)
+    io.append_rows("m", [], METRICS_SCHEMA)  # no snapshot for no rows
+    io.write(spark.createDataFrame(rows, METRICS_SCHEMA), "m", mode="append")
+    snaps = io.snapshots("m")
+    assert len(snaps) == 2 and snaps[0]["schema"] == snaps[1]["schema"]
+    assert [tuple(r) for r in io.read("m").collect()] == rows * 2
+    names = [f.name for f in io.read("m").schema]
+    for s in snaps:
+        assert pq.read_table(s["path"]).to_pylist() == [dict(zip(names, rows[0]))]
+    assert [n for _, n in io.part_rows("m")] == [1, 1]
